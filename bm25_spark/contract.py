@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -169,14 +170,36 @@ def q_idf(spark, sf_dir):
 
 def q_postings_digest(spark, sf_dir):
     """O8 structural digest: per term over all shards — posting count,
-    total tf, doc_id span — proves postings are complete and doc-keyed."""
+    total tf, doc_id span — proves postings are complete and doc-keyed.
+    Read off the packed blobs: the count is Σ n, the rest comes from one
+    decode per (term, shard) blob."""
+    import numpy as np
+
+    from bm25_spark.functions import codec
+
     idx = _index(spark, sf_dir)
-    e = idx.postings.select("term", F.explode("postings").alias("p"))
+    shard_size = idx.shard_size
+
+    @F.pandas_udf("sum_tf long, min_doc long, max_doc long")
+    def digest(data: pd.Series, n: pd.Series, shard: pd.Series) -> pd.DataFrame:
+        rows = []
+        for d, nn, s in zip(data, n, shard):
+            ids, tfs, _ = codec.unpack_postings(
+                bytes(d), int(nn), int(s) * shard_size
+            )
+            rows.append(
+                (int(tfs.sum(dtype=np.int64)), int(ids[0]), int(ids[-1]))
+            )
+        return pd.DataFrame(rows, columns=["sum_tf", "min_doc", "max_doc"])
+
+    e = idx.packed.select(
+        "term", "n", digest("data", "n", "shard").alias("p")
+    )
     return e.groupBy("term").agg(
-        F.count(F.lit(1)).cast("long").alias("n_postings"),
-        F.sum("p.tf").cast("long").alias("sum_tf"),
-        F.min("p.doc_id").cast("long").alias("min_doc"),
-        F.max("p.doc_id").cast("long").alias("max_doc"),
+        F.sum("n").cast("long").alias("n_postings"),
+        F.sum("p.sum_tf").cast("long").alias("sum_tf"),
+        F.min("p.min_doc").cast("long").alias("min_doc"),
+        F.max("p.max_doc").cast("long").alias("max_doc"),
     )
 
 

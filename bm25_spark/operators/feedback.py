@@ -143,17 +143,14 @@ def _relevant_term_counts_warm(
                 raw = rcache.get(key)
                 if raw is None:  # cache mutated under us — play it safe
                     return None
-                if raw[4] is not None:  # block offsets: partial decode
-                    bl = raw[2]  # last doc_id per block
-                    need = np.unique(np.searchsorted(bl, w_arr, "left"))
-                    need = need[need < len(bl)]
-                    if len(need) == 0:
-                        continue
-                    ids, tfs, dlsa = packed_mod._decoded_blocks_driver(
-                        index, key, raw, need
-                    )
-                else:  # legacy blob without offsets: full-shard decode
-                    ids, tfs, dlsa = packed_mod._decoded(index, key)
+                bl = raw[2]  # last doc_id per block
+                need = np.unique(np.searchsorted(bl, w_arr, "left"))
+                need = need[need < len(bl)]
+                if len(need) == 0:
+                    continue
+                ids, tfs, dlsa = packed_mod._driver_blocks(
+                    index, key, raw, need
+                )
                 mask = np.isin(ids, w_arr)
                 for did, tf, dl in zip(ids[mask], tfs[mask], dlsa[mask]):
                     tfm.setdefault(int(did), {})[term] = int(tf)

@@ -7,7 +7,9 @@ partition key; a non-partitioned index uses pk = ''):
 
 - docs     (pk, doc_id, <original cols>)              one row per document
 - terms    (pk, term, df, idf)                        dictionary
-- postings (pk, term, shard, postings:array<struct<doc_id,tf,dl>>)
+- packed   (pk, term, shard, n, data, block_last, block_max, block_off)
+  delta+varint posting blobs with block-max metadata — the ONLY postings
+  form (persisted as the ``postings`` table; see operators/packed.py)
 - stats    (pk, n_docs, avgdl)                        per-partition scalars
 - doclens  (pk, doc_id, dl)                           derived view (see
   doclens_view) — decoded from the build's sentinel rows, never a second
@@ -16,8 +18,8 @@ partition key; a non-partitioned index uses pk = ''):
 Design notes vs the reference (lib/src/bm25.dart:423-501):
 
 - dl is stored INSIDE each posting (doc_id, tf, dl) so the query path never
-  joins a 10^12-row doclens table — norm is recomputed as a fused JVM
-  expression from (tf, dl, avgdl). Rank-identical; pure layout choice.
+  joins a 10^12-row doclens table — norm is recomputed by the scorer from
+  (tf, dl, avgdl). Rank-identical; pure layout choice.
 - ``shard = doc_id // shard_size`` splits each term's postings into
   contiguous doc-id ranges. This is the skew salt for Zipfian hot terms
   (a stopword-like term appearing in 30% of 10^12 docs cannot be one
@@ -35,7 +37,6 @@ import os
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -63,17 +64,15 @@ class BM25Index:
     spark: SparkSession
     docs: DataFrame
     terms: DataFrame
-    postings: DataFrame
+    packed: DataFrame  # PACKED_SCHEMA posting blobs
     stats: DataFrame
     k1: float = DEFAULT_K1
     b: float = DEFAULT_B
     index_fields: tuple[str, ...] = ()
     stopwords: frozenset[str] | None = None
     partitioned: bool = False
-    packed: DataFrame | None = None  # set by packed.pack_index
     text_col: str = "text"
     shard_size: int = DEFAULT_SHARD_SIZE
-    flat: DataFrame | None = None  # (pk, term, doc_id, dl, tf) pre-postings
     enc: DataFrame | None = None  # tokenized docs (with per-doc term counts)
     doclens: DataFrame | None = None  # (pk, doc_id, dl) — derived view
 
@@ -84,8 +83,7 @@ class BM25Index:
         AFTER its upstream or its frozen plan will recompute the upstream
         instead of reading the cache (terms derives from packed, packed
         from stats)."""
-        post = self.packed if self.packed is not None else self.postings
-        return (self.stats, post, self.terms, self.docs)
+        return (self.stats, self.packed, self.terms, self.docs)
 
     def persist(self, persist_docs: bool = True) -> "BM25Index":
         for df in self._physical():
@@ -107,11 +105,10 @@ class BM25Index:
         docs is a trivial projection of it and a second full copy in the
         block store is pure memory-bandwidth waste; filters read through
         the parent instead."""
-        pin = self.enc if self.enc is not None else self.flat
+        pin = self.enc
         if pin is not None:
             pin.persist(StorageLevel.MEMORY_AND_DISK)
         self.persist(persist_docs=persist_docs)
-        post = self.packed if self.packed is not None else self.postings
         # Count in COMPUTE order, not registration order: each count's own
         # job computes-and-caches every uncached upstream it scans, so no
         # table is materialized by one job and then re-scanned by the
@@ -121,7 +118,7 @@ class BM25Index:
         # pure cache reads. (Registration above already happened in
         # dependency order — that is what freezes the derived plans
         # against pin's InMemoryRelation.)
-        for df in (self.stats, self.terms, post, self.docs):
+        for df in (self.stats, self.terms, self.packed, self.docs):
             if df is self.docs and not persist_docs:
                 continue  # not cached: a count would do nothing useful
             df.count()
@@ -144,10 +141,9 @@ class BM25Index:
         (merge_indexes, compact_segments, checkpointed builds) return a
         NEW BM25Index, whose caches start empty — a warmed old object
         keeps serving its own (still-correct) snapshot. Anything that
-        instead mutates ``packed``/``postings``/``stats`` on an existing
-        object IN PLACE must call this method, or a warmed search head
-        will serve stale postings. (pack_index does; external callers
-        rebinding table attributes by hand must too.)"""
+        instead mutates ``packed``/``stats`` on an existing object IN
+        PLACE (e.g. rebinding table attributes by hand) must call this
+        method, or a warmed search head will serve stale postings."""
         for k in [k for k in self.__dict__ if k.startswith("_")]:
             del self.__dict__[k]
 
@@ -254,22 +250,11 @@ def _finish_index(
         if doclens_override is not None
         else (doclens_view(pin) if pin is not None else None)
     )
-    postings = decoded_postings_view(packed, shard_size)
-    # (pk, term, doc_id, dl, tf) debug/contract view, decoded on demand
-    flat = postings.select(
-        "pk", "term", F.explode("postings").alias("p")
-    ).select(
-        "pk",
-        "term",
-        F.col("p.doc_id").alias("doc_id"),
-        F.col("p.dl").alias("dl"),
-        F.col("p.tf").alias("tf"),
-    )
     return BM25Index(
         spark=spark,
         docs=docs_out,
         terms=terms,
-        postings=postings,
+        packed=packed,
         stats=stats,
         k1=k1,
         b=b,
@@ -278,9 +263,7 @@ def _finish_index(
         partitioned=partitioned,
         text_col=text_col,
         shard_size=shard_size,
-        flat=flat,
         enc=pin,
-        packed=packed,
         doclens=doclens,
     )
 
@@ -792,10 +775,10 @@ def merge_indexes(indexes: list[BM25Index]) -> BM25Index:
             or tuple(ix.index_fields) != tuple(first.index_fields)
         ):
             raise ValueError("merge_indexes: incompatible index parameters")
-        if ix.packed is None or ix.doclens is None:
-            raise ValueError("merge_indexes: packed + doclens required")
-    if first.packed is None or first.doclens is None:
-        raise ValueError("merge_indexes: packed + doclens required")
+        if ix.doclens is None:
+            raise ValueError("merge_indexes: doclens required")
+    if first.doclens is None:
+        raise ValueError("merge_indexes: doclens required")
 
     docs_u = indexes[0].docs
     doclens_u = indexes[0].doclens
@@ -871,42 +854,6 @@ def doclens_view(runs: DataFrame) -> DataFrame:
     ).mapInArrow(dec, schema=out_schema)
 
 
-def decoded_postings_view(packed: DataFrame, shard_size: int) -> DataFrame:
-    """(pk, term, shard, postings: array<struct<doc_id,tf,dl>>) — the
-    logical array view of the packed blobs, decoded on demand (contract
-    cross-checks, debugging; the query path reads the blobs directly)."""
-    from bm25_spark.functions import codec
-
-    out_t = ArrayType(
-        StructType(
-            [
-                StructField("doc_id", LongType(), False),
-                StructField("tf", IntegerType(), False),
-                StructField("dl", IntegerType(), False),
-            ]
-        )
-    )
-
-    @F.pandas_udf(out_t)
-    def dec(data: pd.Series, n: pd.Series, shard: pd.Series) -> pd.Series:
-        out = []
-        for d, nn, s in zip(data, n, shard):
-            ids, tfs, dls = codec.unpack_postings(
-                bytes(d), int(nn), int(s) * shard_size
-            )
-            out.append(
-                [
-                    {"doc_id": int(i), "tf": int(t), "dl": int(l)}
-                    for i, t, l in zip(ids, tfs, dls)
-                ]
-            )
-        return pd.Series(out)
-
-    return packed.select(
-        "pk", "term", "shard", dec("data", "n", "shard").alias("postings")
-    )
-
-
 @dataclass
 class IndexPaths:
     root: str
@@ -920,7 +867,7 @@ class IndexPaths:
         return f"{self.root}/terms"
 
     @property
-    def postings(self):
+    def packed(self):
         return f"{self.root}/postings"
 
     @property
@@ -1042,10 +989,10 @@ def write_index(
     tests/test_persistence_cli.py::test_storage_format_dispatch. For
     catalog-managed Iceberg tables (snapshots, partition evolution, time
     travel) use write_index_tables/read_index_tables instead. The postings
-    table is the PACKED form (delta+varint blobs + block-max); readers
-    re-derive the array view lazily. meta.json carries shard_size/k1/b/
-    fields/stopwords/storage_format so readers cannot silently decode with
-    mismatched parameters."""
+    table is the PACKED form (delta+varint blobs + block-max + block
+    offsets). meta.json carries shard_size/k1/b/fields/stopwords/
+    storage_format so readers cannot silently decode with mismatched
+    parameters."""
     p = IndexPaths(root)
 
     def w(df, path):
@@ -1058,7 +1005,7 @@ def write_index(
 
     w(index.docs, p.docs)
     w(index.terms, p.terms)
-    w(index.packed if index.packed is not None else index.postings, p.postings)
+    w(index.packed, p.packed)
     if index.doclens is not None:
         w(index.doclens, p.doclens)
     index.stats.write.mode(mode).format(storage_format).save(p.stats)
@@ -1067,6 +1014,61 @@ def write_index(
     meta = index_meta(index)
     meta["storage_format"] = storage_format
     _write_meta(meta, p.meta)
+
+
+def _index_from_tables(
+    spark: SparkSession,
+    where: str,
+    rd,
+    meta: dict,
+    has_doclens: bool,
+    shard_size: int | None = None,
+    **params,
+) -> BM25Index:
+    """The one reader rule behind read_index, read_index_tables and
+    plans.checkpoint.read_checkpointed_index: ``rd(table)`` loads one
+    index table; parameters come from ``params`` (explicit caller
+    arguments, None = unset), else from ``meta`` (the write-side truth),
+    else from the defaults.
+
+    Two checks: the postings table must be the packed layout with block
+    offsets (the only form the scorers read), and ``shard_size`` is never
+    defaulted — it is DECODE-critical (doc_id = shard*shard_size +
+    deltas), so guessing it wrong would silently corrupt every doc_id."""
+    packed = rd("postings")
+    missing = sorted({"data", "block_off"} - set(packed.columns))
+    if missing:
+        raise ValueError(
+            f"{where}: postings table lacks {missing} (not the packed "
+            "layout with block offsets) — rebuild the index"
+        )
+    if shard_size is None:
+        shard_size = meta.get("shard_size")
+        if shard_size is None:
+            raise ValueError(
+                f"{where}: no shard_size in the index metadata or the "
+                "arguments — refusing to guess a decode-critical parameter"
+            )
+
+    def param(name: str, default):
+        v = params.get(name)
+        return v if v is not None else meta.get(name, default)
+
+    stopwords = param("stopwords", None)
+    return BM25Index(
+        spark=spark,
+        docs=rd("docs"),
+        terms=rd("terms"),
+        packed=packed,
+        stats=rd("stats"),
+        doclens=rd("doclens") if has_doclens else None,
+        k1=float(param("k1", DEFAULT_K1)),
+        b=float(param("b", DEFAULT_B)),
+        index_fields=tuple(param("index_fields", ("role", "tool", "conv_id"))),
+        stopwords=frozenset(stopwords) if stopwords else None,
+        partitioned=bool(param("partitioned", False)),
+        shard_size=int(shard_size),
+    )
 
 
 def read_index(
@@ -1082,64 +1084,32 @@ def read_index(
 ) -> BM25Index:
     """Load a persisted index. Parameters default from the root's meta.json
     (the write-side truth); explicit arguments override. shard_size given
-    neither way is an error for packed indexes — silently defaulting it
-    would decode corrupt doc_ids. ``storage_format`` likewise defaults
+    neither way is an error — silently defaulting it would decode corrupt
+    doc_ids (see _index_from_tables). ``storage_format`` likewise defaults
     from meta.json (an index written as Iceberg must not be read as raw
     parquet — the file layout under an Iceberg table dir is not a plain
     parquet dataset)."""
     p = IndexPaths(root)
     meta = read_meta(p.meta) or {}
-    k1 = k1 if k1 is not None else meta.get("k1", DEFAULT_K1)
-    b = b if b is not None else meta.get("b", DEFAULT_B)
-    if index_fields is None:
-        index_fields = tuple(
-            meta.get("index_fields", ("role", "tool", "conv_id"))
-        )
-    if stopwords is None:
-        stopwords = meta.get("stopwords")
-    if partitioned is None:
-        partitioned = bool(meta.get("partitioned", False))
     if storage_format is None:
         storage_format = meta.get("storage_format", "parquet")
+    paths = {
+        "docs": p.docs, "terms": p.terms, "postings": p.packed,
+        "stats": p.stats, "doclens": p.doclens,
+    }
 
-    def rd(path: str) -> DataFrame:
-        df = spark.read.format(storage_format).load(path)
+    def rd(table: str) -> DataFrame:
+        df = spark.read.format(storage_format).load(paths[table])
         if "pk" in df.columns:
             # hive partition discovery can infer numeric pk values as int;
             # every driver-side cache and RESULT_SCHEMA key pk as string
             df = df.withColumn("pk", F.col("pk").cast("string"))
         return df
 
-    post = rd(p.postings)
-    packed = post if "data" in post.columns else None
-    if shard_size is None:
-        shard_size = meta.get("shard_size")
-        if shard_size is None:
-            if packed is not None:
-                raise ValueError(
-                    f"{root}: no meta.json and no shard_size given — "
-                    "refusing to guess a decode-critical parameter"
-                )
-            shard_size = DEFAULT_SHARD_SIZE
-    doclens = rd(p.doclens) if _path_is_dir(p.doclens) else None
-    return BM25Index(
-        spark=spark,
-        docs=rd(p.docs),
-        terms=rd(p.terms),
-        postings=(
-            decoded_postings_view(packed, shard_size)
-            if packed is not None
-            else post
-        ),
-        packed=packed,
-        stats=rd(p.stats),
-        doclens=doclens,
-        k1=k1,
-        b=b,
-        index_fields=tuple(index_fields),
-        stopwords=frozenset(stopwords) if stopwords else None,
-        partitioned=partitioned,
-        shard_size=shard_size,
+    return _index_from_tables(
+        spark, root, rd, meta, _path_is_dir(p.doclens),
+        shard_size=shard_size, k1=k1, b=b, index_fields=index_fields,
+        stopwords=stopwords, partitioned=partitioned,
     )
 
 
@@ -1182,10 +1152,7 @@ def write_index_tables(
 
     w(index.docs, f"{prefix}_docs")
     w(index.terms, f"{prefix}_terms")
-    w(
-        index.packed if index.packed is not None else index.postings,
-        f"{prefix}_postings",
-    )
+    w(index.packed, f"{prefix}_postings")
     if index.doclens is not None:
         w(index.doclens, f"{prefix}_doclens")
     index.stats.write.mode(mode).format(storage_format).saveAsTable(
@@ -1217,46 +1184,14 @@ def read_index_tables(
         )
     meta = json.loads(meta_rows[0]["meta"])
 
-    def rd(name: str) -> DataFrame:
-        df = spark.table(name)
+    def rd(table: str) -> DataFrame:
+        df = spark.table(f"{prefix}_{table}")
         if "pk" in df.columns:
             df = df.withColumn("pk", F.col("pk").cast("string"))
         return df
 
-    post = rd(f"{prefix}_postings")
-    packed = post if "data" in post.columns else None
-    if shard_size is None:
-        shard_size = meta.get("shard_size")
-        if shard_size is None and packed is not None:
-            raise ValueError(
-                f"{prefix}: metadata lacks shard_size — refusing to guess "
-                "a decode-critical parameter"
-            )
-        shard_size = shard_size or DEFAULT_SHARD_SIZE
-    doclens = (
-        rd(f"{prefix}_doclens")
-        if spark.catalog.tableExists(f"{prefix}_doclens")
-        else None
-    )
-    stopwords = meta.get("stopwords")
-    return BM25Index(
-        spark=spark,
-        docs=rd(f"{prefix}_docs"),
-        terms=rd(f"{prefix}_terms"),
-        postings=(
-            decoded_postings_view(packed, shard_size)
-            if packed is not None
-            else post
-        ),
-        packed=packed,
-        stats=rd(f"{prefix}_stats"),
-        doclens=doclens,
-        k1=float(meta.get("k1", DEFAULT_K1)),
-        b=float(meta.get("b", DEFAULT_B)),
-        index_fields=tuple(
-            meta.get("index_fields", ("role", "tool", "conv_id"))
-        ),
-        stopwords=frozenset(stopwords) if stopwords else None,
-        partitioned=bool(meta.get("partitioned", False)),
-        shard_size=int(shard_size),
+    return _index_from_tables(
+        spark, prefix, rd, meta,
+        spark.catalog.tableExists(f"{prefix}_doclens"),
+        shard_size=shard_size,
     )

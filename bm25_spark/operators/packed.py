@@ -11,9 +11,15 @@ lib/src/bm25.dart:437-468, re-thought for a 1000-executor cluster):
   contiguous doc_id ranges), so per-(query, pk, shard) scoring is complete
   and a per-shard top-k merges into an EXACT global top-k — the distributed
   analog of the reference's single-threaded bounded heap (bm25.dart:744-790);
-- scoring is pure numpy over Arrow batches: varint-decode, sparse
-  accumulate (np.add.at over doc slots), argpartition top-k. No per-row
-  Python, no JVM<->Python chatter beyond the ≤|q| blobs/shard.
+- scoring is pure numpy over Arrow batches: varint-decode, dense
+  accumulate (np.bincount over shard-local doc slots), partition top-k. No
+  per-row Python, no JVM<->Python chatter beyond the ≤|q| blobs/shard.
+
+One scoring kernel, ``score_shard``, serves both strategies below: it
+scores one query against one shard's weighted term blobs by segment-ordered
+block-max WAND with chunked theta updates, decoding only the blocks it
+cannot rule out through one per-block cache over ``codec.unpack_blocks``
+(``_decode_blocks``). The strategies differ only in what they feed it.
 
 Two physical strategies, chosen per query:
 
@@ -22,8 +28,9 @@ Two physical strategies, chosen per query:
    dictionary (cached), applies SHARD-LEVEL BLOCK-MAX PRUNING — shards whose
    score upper bound ub(shard) = Σ_t qtf·idf_t·max_b block_max(t, shard, b)
    cannot beat the running k-th score are never fetched nor decoded (the
-   WAND bound at shard granularity; safe ⇒ exact top-k) — and scores the
-   surviving blobs in-process. This is what a search head does; Spark serves
+   WAND bound at shard granularity; safe ⇒ exact top-k) — and runs the
+   kernel on the surviving shards in-process, carrying each query's running
+   top-k from shard to shard. This is what a search head does; Spark serves
    as the index store (predicate pushdown on term reads only those rows).
 2. **Cluster path** (batch / huge postings): ship blobs to executors,
    score per (pk, shard) group in a vectorized applyInPandas — ALL queries
@@ -33,13 +40,15 @@ Two physical strategies, chosen per query:
    fewer shard groups than the cluster has slots, the query side is split
    into a bounded number of buckets (blob replication = min(buckets,
    queries-that-use-the-term), chosen at plan time — never Q). Per-shard
-   top-k merges globally. Metadata filters become a doc-id mask INSIDE the
-   numpy scorer (reference semantics: filtered docs skipped during
-   traversal, bm25.dart:644).
+   top-k merges globally. Each task runs the kernel once per (query, shard)
+   and shares its block decodes across the bucket's queries. Metadata
+   filters become a doc-id mask INSIDE the kernel (reference semantics:
+   filtered docs skipped during traversal, bm25.dart:644).
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
 import numpy as np
@@ -47,10 +56,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
     DoubleType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -65,16 +71,6 @@ from bm25_spark.operators.searcher import (
     _filter_predicate,
     _stats_map,
     empty_result,
-)
-
-PACKED_FIELDS = StructType(
-    [
-        StructField("n", IntegerType(), False),
-        StructField("data", BinaryType(), False),
-        StructField("block_last", ArrayType(LongType()), False),
-        StructField("block_max", ArrayType(DoubleType()), False),
-        StructField("block_off", ArrayType(IntegerType()), False),
-    ]
 )
 
 # Above this many candidate postings the driver path would pull too much —
@@ -97,64 +93,6 @@ DRIVER_PATH_MAX_WORK = int(
 DRIVER_PATH_MAX_ALLOWED = int(
     os.environ.get("BM25_DRIVER_PATH_MAX_ALLOWED", "2000000")
 )
-
-
-def pack_index(index: BM25Index) -> BM25Index:
-    """Derive ``index.packed`` from an array-layout postings table. The
-    builder packs directly (indexer._packed_postings), so this is a no-op
-    for freshly built indexes; it remains for legacy-layout loads."""
-    if index.packed is not None:
-        return index
-    k1, b = index.k1, index.b
-    shard_size = index.shard_size
-
-    @F.pandas_udf(PACKED_FIELDS)
-    def pack(
-        doc_ids: pd.Series,
-        tfs: pd.Series,
-        dls: pd.Series,
-        shards: pd.Series,
-        avgdls: pd.Series,
-    ) -> pd.DataFrame:
-        out = {
-            "n": [], "data": [], "block_last": [], "block_max": [],
-            "block_off": [],
-        }
-        for ids, tf, dl, shard, avgdl in zip(doc_ids, tfs, dls, shards, avgdls):
-            ids = np.asarray(ids, dtype=np.int64)
-            tf = np.asarray(tf, dtype=np.int64)
-            dl = np.asarray(dl, dtype=np.int64)
-            data, n, bl, bm, off = codec.pack_postings(
-                ids, tf, dl, int(shard) * shard_size, k1, b, float(avgdl)
-            )
-            out["n"].append(n)
-            out["data"].append(data)
-            out["block_last"].append(bl)
-            out["block_max"].append(bm)
-            out["block_off"].append(off)
-        return pd.DataFrame(out)
-
-    p = index.postings.join(F.broadcast(index.stats.select("pk", "avgdl")), "pk")
-    packed = p.select(
-        "pk",
-        "term",
-        "shard",
-        pack(
-            F.col("postings.doc_id"),
-            F.col("postings.tf"),
-            F.col("postings.dl"),
-            F.col("shard"),
-            F.col("avgdl"),
-        ).alias("z"),
-    ).select(
-        "pk", "term", "shard", "z.n", "z.data", "z.block_last",
-        "z.block_max", "z.block_off",
-    )
-    index.packed = packed
-    # the physical postings just changed in place -> warmed caches (if
-    # any) would serve the OLD postings; see BM25Index.invalidate_caches
-    index.invalidate_caches()
-    return index
 
 
 def _qrows(index: BM25Index, queries, stopwords):
@@ -197,10 +135,7 @@ def warm_query_caches(
             F.sum(F.length("data")).alias("b")
         ).first()["b"]
         do_blobs = total is not None and int(total) <= max_blob_bytes
-    has_off = "block_off" in index.packed.columns
-    cols = ["pk", "term", "shard", "n", "block_last", "block_max"]
-    if has_off:
-        cols.append("block_off")
+    cols = ["pk", "term", "shard", "n", "block_last", "block_max", "block_off"]
     if do_blobs:
         cols.append("data")
     scache: dict = {}
@@ -210,17 +145,8 @@ def warm_query_caches(
             (int(r["shard"]), int(r["n"]), float(max(r["block_max"])))
         )
         if do_blobs:
-            rcache[(r["pk"], r["term"], int(r["shard"]))] = (
-                int(r["n"]),
-                bytes(r["data"]),
-                np.asarray(r["block_last"], dtype=np.int64),
-                np.asarray(r["block_max"], dtype=np.float64),
-                (
-                    np.asarray(r["block_off"], dtype=np.int64)
-                    if has_off and r["block_off"] is not None
-                    else None
-                ),
-            )
+            key = (r["pk"], r["term"], int(r["shard"]))
+            rcache[key] = _raw_blob(*(r[c] for c in _BLOB_COLS))
     # wholesale replace — appending onto entries from earlier lazy probes
     # would duplicate shard meta (and double scores)
     index.__dict__["_term_meta_cache"] = tcache
@@ -228,8 +154,6 @@ def warm_query_caches(
     if do_blobs:
         index.__dict__["_raw_blob_cache"] = rcache
         index.__dict__["_blobs_complete"] = True
-    from bm25_spark.operators.searcher import _stats_map
-
     _stats_map(index, None)
     index.__dict__["_dict_complete"] = True
     return True
@@ -292,29 +216,38 @@ def _shard_meta(index: BM25Index, terms_needed, partition_keys):
     return out
 
 
+_BLOB_COLS = ("n", "data", "block_last", "block_max", "block_off")
+
+
+def _raw_blob(n, data, block_last, block_max, block_off) -> tuple:
+    """One packed row's _BLOB_COLS -> the raw blob tuple every scorer
+    reads: (n, data, block_last, block_max, block_off)."""
+    return (
+        int(n),
+        bytes(data),
+        np.asarray(block_last, dtype=np.int64),
+        np.asarray(block_max, dtype=np.float64),
+        np.asarray(block_off, dtype=np.int64),
+    )
+
+
 def _fetch_raw_blobs(index: BM25Index, wanted: set[tuple[str, str, int]]) -> None:
     """Fetch packed blobs (raw bytes) for the given (pk, term, shard) keys
     into the driver cache — ONE Spark collect for all of them (the scan is
     pruned by the term IN (...) predicate: parquet min-max + dictionary).
-    Decoding happens lazily per shard in ``_decoded`` so block-max pruning
-    skips the decode cost of shards it rules out."""
+    Decoding happens lazily per block in ``score_shard`` so block-max
+    pruning skips the decode cost of blocks it rules out."""
     cache = index.__dict__.setdefault("_raw_blob_cache", {})
     if not index.__dict__.get("_blobs_complete") and len(cache) > 65536:
         # bound driver memory for lazily-fetched blobs; refetch is cheap.
         # A complete preload (warm_query_caches) is size-gated instead.
         cache.clear()
-        index.__dict__.get("_decoded_cache", {}).clear()
-        index.__dict__.get("_partial_decode_cache", {}).clear()
-        index.__dict__["_partial_decode_blocks"] = 0
+        index.__dict__.get("_block_cache", {}).clear()
     missing = [k for k in wanted if k not in cache]
     if missing:
         terms_m = sorted({t for _, t, _ in missing})
         pks_m = sorted({p for p, _, _ in missing})
         shards_m = sorted({s for _, _, s in missing})
-        has_off = "block_off" in index.packed.columns
-        cols = ["pk", "term", "shard", "n", "data", "block_last", "block_max"]
-        if has_off:
-            cols.append("block_off")
         rows = (
             index.packed.filter(
                 F.col("term").isin(terms_m)
@@ -325,78 +258,163 @@ def _fetch_raw_blobs(index: BM25Index, wanted: set[tuple[str, str, int]]) -> Non
                 # frontier, not the whole term
                 & F.col("shard").isin(shards_m)
             )
-            .select(*cols)
+            .select("pk", "term", "shard", *_BLOB_COLS)
             .collect()
         )
         for r in rows:
             key = (r["pk"], r["term"], int(r["shard"]))
-            cache[key] = (
-                int(r["n"]),
-                bytes(r["data"]),
-                np.asarray(r["block_last"], dtype=np.int64),
-                np.asarray(r["block_max"], dtype=np.float64),
-                (
-                    np.asarray(r["block_off"], dtype=np.int64)
-                    if has_off and r["block_off"] is not None
-                    else None  # legacy blobs: no offsets -> full decode
-                ),
-            )
+            cache[key] = _raw_blob(*(r[c] for c in _BLOB_COLS))
 
 
-def _decoded(index: BM25Index, key: tuple[str, str, int]):
-    """Decoded (doc_ids, tfs, dls) for one (pk, term, shard), from cache."""
-    dcache = index.__dict__.setdefault("_decoded_cache", {})
-    hit = dcache.get(key)
-    if hit is not None:
-        return hit
-    raw = index.__dict__.get("_raw_blob_cache", {}).get(key)
-    if raw is None:
-        return None
-    n, data = raw[0], raw[1]
-    out = codec.unpack_postings(data, n, key[2] * index.shard_size)
-    dcache[key] = out
-    return out
-
-
-def _decoded_blocks_driver(
-    index: BM25Index,
-    key: tuple[str, str, int],
-    raw,
-    need: np.ndarray,
-):
-    """(ids, tfs, dls) for the given block ids of one (pk, term, shard)
-    blob, via a per-BLOCK cache on the index (the same structure the
-    cluster scorer keeps task-locally): a block reached through different
-    ``need`` shapes across queries decodes exactly once."""
+def _decode_blocks(cache: dict, key, raw: tuple, shard_base: int, need):
+    """(ids, tfs, dls) of the sorted block ids ``need`` of one blob, through
+    ``cache`` — {(key, block id): arrays}. A block reached through
+    different ``need`` shapes (other queries, other segment chunks) decodes
+    exactly once. The driver keeps one such cache per index (see
+    ``_driver_blocks``), a cluster task one per (pk, shard) group."""
     n, data, bl, _bm, off = raw
-    pcache = index.__dict__.setdefault("_partial_decode_cache", {})
-    ct = pcache.setdefault(key, {})
     nl = need.tolist()
-    new = [b_ for b_ in nl if b_ not in ct]
+    new = [b_ for b_ in nl if (key, b_) not in cache]
     if new:
-        n_blocks = index.__dict__.get("_partial_decode_blocks", 0)
-        if n_blocks > 65536:  # bound driver memory; re-decode is cheap
-            pcache.clear()
-            ct = pcache.setdefault(key, {})
-            n_blocks = 0
-            new = nl
-        i_n, t_n, d_n = codec.unpack_blocks(
-            data, n, key[2] * index.shard_size, bl, off,
-            np.asarray(new, np.int64),
+        ids, tfs, dls = codec.unpack_blocks(
+            data, n, shard_base, bl, off, np.asarray(new, np.int64)
         )
         o = 0
         for b_ in new:
             s_ = min((b_ + 1) * codec.BLOCK, n) - b_ * codec.BLOCK
-            ct[b_] = (i_n[o : o + s_], t_n[o : o + s_], d_n[o : o + s_])
+            cache[(key, b_)] = (
+                ids[o : o + s_], tfs[o : o + s_], dls[o : o + s_]
+            )
             o += s_
-        index.__dict__["_partial_decode_blocks"] = n_blocks + len(new)
     if len(nl) == 1:
-        return ct[nl[0]]
-    return (
-        np.concatenate([ct[b_][0] for b_ in nl]),
-        np.concatenate([ct[b_][1] for b_ in nl]),
-        np.concatenate([ct[b_][2] for b_ in nl]),
-    )
+        return cache[(key, nl[0])]
+    parts = [cache[(key, b_)] for b_ in nl]
+    return tuple(np.concatenate(col) for col in zip(*parts))
+
+
+def _driver_blocks(index: BM25Index, key: tuple[str, str, int], raw, need):
+    """``_decode_blocks`` over the index's driver-side block cache."""
+    cache = index.__dict__.setdefault("_block_cache", {})
+    if len(cache) > 65536:  # bound driver memory; re-decode is cheap
+        cache.clear()
+    return _decode_blocks(cache, key, raw, key[2] * index.shard_size, need)
+
+
+def _in_sorted(allow: np.ndarray, ids: np.ndarray) -> np.ndarray:
+    """Membership of ``ids`` in the sorted array ``allow``."""
+    pos = np.searchsorted(allow, ids).clip(max=len(allow) - 1)
+    return allow[pos] == ids
+
+
+# segments scored between two theta updates in score_shard
+_SEG_CHUNK = 64
+
+
+def score_shard(
+    terms: list[tuple],
+    shard_base: int,
+    avgdl: float,
+    k1: float,
+    b: float,
+    k: int,
+    top_buf: np.ndarray,
+    decode,
+    mask=None,
+    prune: bool = True,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Exact BM25 scores of one query over one shard with block-max WAND —
+    the one scoring kernel of the driver and the cluster path.
+
+    ``terms``: (w = qtf*idf, key, raw) per query term present in the
+    shard, in query-term order; raw = (n, data, block_last, block_max,
+    block_off). ``top_buf``: the caller's running top-``k`` scores (theta
+    is its min once it holds k) — the driver carries it across a query's
+    shards, a cluster task starts each (query, shard) empty.
+    ``decode(key, raw, need)``: (ids, tfs, dls) of the sorted block ids
+    ``need``. ``mask(ids)``: bool keep-mask of filter-allowed docs (None =
+    all). ``prune=False`` scores every posting (the reference mode).
+
+    The union of the terms' block_last boundaries partitions the shard's
+    doc-id space into segments, each covered by exactly one block per
+    term. Segments are scored in upper-bound order, _SEG_CHUNK at a time;
+    once top_buf is full, a segment whose summed block maxima cannot reach
+    theta is skipped, and a block ALL of whose segments are skipped is
+    never varint-decoded. The order is ub-descending, so the first dead
+    chunk ends the shard. Safe: block maxima are TRUE upper bounds in the
+    same float association as the scores below, pruning is strict
+    ('< theta'), and every kept doc has all of its blocks decoded — kept
+    scores are exact and the top-k is unchanged even on boundary ties.
+
+    Returns (doc_ids, scores, top_buf): every doc scored (segments are
+    disjoint, so the ids are unique) and the updated buffer."""
+    bounds = np.unique(np.concatenate([raw[2] for _, _, raw in terms]))
+    nseg = len(bounds)
+    seg_ub = np.zeros(nseg)
+    covers = []
+    for w, _key, (_n, _data, bl, bm, _off) in terms:
+        ci = np.searchsorted(bl, bounds)
+        valid = ci < len(bl)
+        seg_ub[valid] += w * bm[ci[valid]]
+        covers.append((ci, valid))
+    order = np.argsort(-seg_ub, kind="stable")
+    step = _SEG_CHUNK if prune else nseg
+    kept_ids, kept_scores = [], []
+    for pos in range(0, nseg, step):
+        chunk = order[pos : pos + step]
+        if prune and len(top_buf) >= k:
+            chunk = chunk[seg_ub[chunk] >= top_buf.min()]
+            if len(chunk) == 0:
+                break  # order is ub-descending: the rest is dead too
+        sel = np.zeros(nseg, dtype=bool)
+        sel[chunk] = True
+        docs_l, contrib_l = [], []
+        for (w, key, raw), (ci, valid) in zip(terms, covers):
+            need = np.unique(ci[sel & valid])
+            if len(need) == 0:
+                continue
+            ids, tfs, dls = decode(key, raw, need)
+            keep = sel[np.searchsorted(bounds, ids)]
+            if mask is not None:
+                # reference semantics: filtered docs skipped during
+                # traversal (bm25.dart:644); mask-only ⇒ the upper bounds
+                # stay valid (pruning exact)
+                keep &= mask(ids)
+            if not keep.any():
+                continue
+            tfs = tfs[keep].astype(np.float64)
+            norm = (1.0 - b) + b * dls[keep].astype(np.float64) / avgdl
+            # float-association contract with the WAND bounds: the
+            # per-posting partial is computed EXACTLY as
+            # codec.pack_postings computes block_max (same ops, same
+            # order), then scaled by w = qtf*idf — the same product the
+            # bounds use. IEEE rounding is monotonic, so score <= bound
+            # holds in floats, not just in math; a different association
+            # can put a true score 1 ulp ABOVE its "upper bound" and mask
+            # an equal-scored doc.
+            contrib_l.append(w * (tfs * (k1 + 1.0) / (tfs + k1 * norm)))
+            docs_l.append(ids[keep])
+        if not docs_l:
+            continue
+        # dense accumulate over shard-local slots (no sort): every
+        # contribution is > 0, so touched slots are exactly the nonzero
+        # ones (reference's sparse `touched`, bm25.dart:633). bincount adds
+        # each slot's contributions in input order — query-term order on
+        # both paths, so driver and cluster scores are bit-identical.
+        dense = np.bincount(
+            np.concatenate(docs_l) - shard_base,
+            weights=np.concatenate(contrib_l),
+        )
+        nz = np.flatnonzero(dense)
+        kept_ids.append(nz + shard_base)
+        kept_scores.append(dense[nz])
+        # running top-k buffer: a theta update costs O(chunk docs + k),
+        # not a partition over everything scored so far
+        top_buf = np.concatenate((top_buf, dense[nz]))
+        if len(top_buf) > k:
+            top_buf = np.partition(top_buf, -k)[-k:]
+    if not kept_ids:
+        return np.empty(0, np.int64), np.empty(0), top_buf
+    return np.concatenate(kept_ids), np.concatenate(kept_scores), top_buf
 
 
 def _driver_topk(
@@ -408,16 +426,14 @@ def _driver_topk(
     prune: bool = True,
     allowed_by_pk: dict[str, np.ndarray] | None = None,
 ) -> list[tuple]:
-    """Exact top-k on the driver with shard-level block-max pruning.
-    Pruning applies to the FETCH as well as the decode: blobs are pulled in
-    ub-descending geometric waves, so a shard theta rules out never crosses
-    the wire. Returns result tuples (query_id, pk, doc_id, score, rank)."""
-    k1, b = index.k1, index.b
+    """Exact top-k on the driver: shard-level block-max pruning around the
+    ``score_shard`` kernel. Pruning applies to the FETCH as well as the
+    decode: blobs are pulled in ub-descending geometric waves, so a shard
+    theta rules out never crosses the wire. Returns result tuples
+    (query_id, pk, doc_id, score, rank)."""
     terms_needed = sorted({t for _, t, _ in qrows})
     tmeta = _term_meta(index, terms_needed, partition_keys)
     smeta = _shard_meta(index, terms_needed, partition_keys)
-    from bm25_spark.operators.searcher import _stats_map
-
     stats = _stats_map(index, partition_keys)
 
     by_query: dict[int, list[tuple[str, int]]] = {}
@@ -430,6 +446,9 @@ def _driver_topk(
     # Σ df. Warmed indexes (_blobs_complete) skip fetching entirely; blobs
     # shared across the batch's queries are fetched once (_raw_blob_cache).
     blobs_complete = bool(index.__dict__.get("_blobs_complete"))
+    cache = index.__dict__.setdefault("_raw_blob_cache", {})
+    decode = functools.partial(_driver_blocks, index)
+    k_eff = per_partition_limit or limit
 
     results: list[tuple] = []
     for qid, tq in sorted(by_query.items()):
@@ -442,54 +461,40 @@ def _driver_topk(
             st = stats.get(pk)
             if st is None:
                 continue
+            mask = None
             if allowed_by_pk is not None:
                 allow = allowed_by_pk.get(pk)
                 if allow is None or len(allow) == 0:
                     continue
-            avgdl = st[1]
+                mask = functools.partial(_in_sorted, allow)
             # shard -> ub accumulation over query terms (with multiplicity)
             shard_ub: dict[int, float] = {}
-            shard_terms: dict[int, list[tuple[str, int, float]]] = {}
+            shard_terms: dict[int, list[tuple[str, float]]] = {}
             for term, qtf in tq:
                 meta = tmeta.get((pk, term))
                 if meta is None:
                     continue
-                idf = meta[0]
+                w = qtf * meta[0]
                 for shard, n, ub_partial in smeta.get((pk, term), ()):
-                    shard_ub[shard] = shard_ub.get(shard, 0.0) + qtf * idf * ub_partial
-                    shard_terms.setdefault(shard, []).append((term, qtf, idf))
+                    shard_ub[shard] = shard_ub.get(shard, 0.0) + w * ub_partial
+                    shard_terms.setdefault(shard, []).append((term, w))
             if not shard_ub:
                 continue
-            # WAND, two granularities (both bounds are TRUE upper bounds,
-            # pruning is strict '< theta', so the top-k stays exact even on
-            # score ties at the boundary):
-            # 1. shard level: visit shards in ub-descending order; stop
-            #    when the running k-th score strictly beats a shard's bound
-            #    (this shard and all remaining are never decoded).
-            # 2. block level, inside a surviving shard: the union of every
-            #    term's block_last boundaries partitions the shard's doc-id
-            #    space into segments, each covered by exactly one block per
-            #    term; a segment whose summed block maxima cannot reach
-            #    theta is dead, and a block ALL of whose segments are dead
-            #    is never varint-decoded (codec.unpack_blocks jumps over it
-            #    via block_off). Docs in dead segments are masked out of
-            #    straddling blocks — their true score is < theta, so
-            #    dropping them cannot change the top-k; every kept doc has
-            #    all of its blocks decoded, so kept scores are exact.
+            # shard-level WAND (the block level runs inside score_shard):
+            # visit shards in ub-descending order; stop when the running
+            # k-th score strictly beats a shard's bound (this shard and all
+            # remaining are never fetched nor decoded)
             order = sorted(shard_ub, key=lambda s: -shard_ub[s])
-            k_eff = per_partition_limit or limit
-            theta = -np.inf
+            top_buf = np.empty(0, dtype=np.float64)
             kept_ids: list[np.ndarray] = []
             kept_scores: list[np.ndarray] = []
-            n_kept = 0
-            # running top-k_eff score buffer: theta updates cost
-            # O(shard_candidates + k) per shard, not a partition over the
-            # whole accumulated candidate set every shard
-            top_buf = np.empty(0, dtype=np.float64)
-            cache = index.__dict__.setdefault("_raw_blob_cache", {})
             fetch_hi = 0  # shards order[:fetch_hi] have been ensured
             for si, shard in enumerate(order):
-                if prune and n_kept >= k_eff and shard_ub[shard] < theta:
+                if (
+                    prune
+                    and len(top_buf) >= k_eff
+                    and shard_ub[shard] < top_buf.min()
+                ):
                     break
                 if not blobs_complete and si >= fetch_hi:
                     # geometric fetch wave in ub-descending order: the
@@ -500,109 +505,25 @@ def _driver_topk(
                     want = {
                         (pk, t, s)
                         for s in order[fetch_hi:hi]
-                        for t, _, _ in shard_terms[s]
+                        for t, _ in shard_terms[s]
                     }
                     if any(k not in cache for k in want):
                         _fetch_raw_blobs(index, want)
                     fetch_hi = hi
-                entries = []
-                for term, qtf, idf in shard_terms[shard]:
-                    raw = cache.get((pk, term, shard))
-                    if raw is not None:
-                        entries.append((term, qtf, idf, raw))
-                if not entries:
+                terms = [
+                    (w, (pk, t, shard), cache[(pk, t, shard)])
+                    for t, w in shard_terms[shard]
+                    if (pk, t, shard) in cache
+                ]
+                if not terms:
                     continue
-                use_blocks = (
-                    prune
-                    and n_kept >= k_eff
-                    and np.isfinite(theta)
-                    and all(e[3][4] is not None for e in entries)
+                ids, scores, top_buf = score_shard(
+                    terms, shard * index.shard_size, st[1], index.k1,
+                    index.b, k_eff, top_buf, decode, mask, prune,
                 )
-                if use_blocks:
-                    bounds = np.unique(
-                        np.concatenate([e[3][2] for e in entries])
-                    )
-                    seg_ub = np.zeros(len(bounds))
-                    cover = []
-                    for term, qtf, idf, (n, data, bl, bm, off) in entries:
-                        ci = np.searchsorted(bl, bounds)
-                        valid = ci < len(bl)
-                        seg_ub[valid] += qtf * idf * bm[ci[valid]]
-                        cover.append((ci, valid))
-                    alive = seg_ub >= theta
-                    if not alive.any():
-                        continue
-                docs_l, contrib_l = [], []
-                for ei, (term, qtf, idf, raw) in enumerate(entries):
-                    n, data, bl, bm, off = raw
-                    if use_blocks:
-                        ci, valid = cover[ei]
-                        need = np.unique(ci[alive & valid])
-                        if len(need) == 0:
-                            continue
-                        if len(need) == len(bl):
-                            ids, tfs, dls = _decoded(index, (pk, term, shard))
-                        else:
-                            ids, tfs, dls = _decoded_blocks_driver(
-                                index, (pk, term, shard), raw, need
-                            )
-                        seg_id = np.searchsorted(bounds, ids)
-                        keep = alive[seg_id]
-                        if allowed_by_pk is not None:
-                            pos = np.searchsorted(allow, ids).clip(
-                                max=len(allow) - 1
-                            )
-                            keep &= allow[pos] == ids
-                        if not keep.any():
-                            continue
-                        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                    else:
-                        blob = _decoded(index, (pk, term, shard))
-                        if blob is None:
-                            continue
-                        ids, tfs, dls = blob
-                        if allowed_by_pk is not None:
-                            # reference semantics: filtered docs skipped
-                            # during traversal (bm25.dart:644); mask-only ⇒
-                            # the upper bounds stay valid (pruning exact)
-                            pos = np.searchsorted(allow, ids).clip(
-                                max=len(allow) - 1
-                            )
-                            keep = allow[pos] == ids
-                            if not keep.any():
-                                continue
-                            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                    tfs = tfs.astype(np.float64)
-                    norm = (1.0 - b) + b * dls.astype(np.float64) / avgdl
-                    # float-association contract with the WAND bounds: the
-                    # per-posting partial is computed EXACTLY as
-                    # codec.pack_postings computes block_max (same ops, same
-                    # order), then scaled by w = qtf*idf — the same product
-                    # the bounds use. IEEE rounding is monotonic, so
-                    # score <= bound holds in floats, not just in math; a
-                    # different association can put a true score 1 ulp ABOVE
-                    # its "upper bound" and mask an equal-scored doc.
-                    w = qtf * idf
-                    contrib_l.append(w * (tfs * (k1 + 1.0) / (tfs + k1 * norm)))
-                    docs_l.append(ids)
-                if not docs_l:
-                    continue
-                docs_cat = np.concatenate(docs_l)
-                contribs = np.concatenate(contrib_l)
-                # dense accumulate over shard-local slots (no sort): every
-                # contribution is > 0, so touched slots are exactly the
-                # nonzero ones (reference's sparse `touched`, bm25.dart:633)
-                slots = docs_cat - shard * index.shard_size
-                dense = np.bincount(slots, weights=contribs)
-                nz = np.flatnonzero(dense)
-                kept_ids.append(nz + shard * index.shard_size)
-                kept_scores.append(dense[nz])
-                n_kept += len(nz)
-                top_buf = np.concatenate((top_buf, kept_scores[-1]))
-                if len(top_buf) > k_eff:
-                    top_buf = np.partition(top_buf, -k_eff)[-k_eff:]
-                if len(top_buf) >= k_eff:
-                    theta = top_buf.min()
+                if len(ids):
+                    kept_ids.append(ids)
+                    kept_scores.append(scores)
             if not kept_ids:
                 continue
             ids = np.concatenate(kept_ids)
@@ -711,8 +632,6 @@ def _cluster_scored(
 
     needed = sorted({t for _, t, _ in qrows})
     p = index.packed.filter(F.col("term").isin(needed))
-    if "block_off" not in p.columns:  # legacy layout: full decode fallback
-        p = p.withColumn("block_off", F.lit(None).cast("array<int>"))
     if partition_keys is not None:
         p = p.filter(F.col("pk").isin(partition_keys))
 
@@ -833,181 +752,65 @@ def _cluster_scored(
         ).astype({"query_id": np.int64, "doc_id": np.int64, "score": np.float64})
 
     def score_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        """Score every query of this bucket against one shard's blobs with
-        BLOCK-MAX WAND inside the executor task: per query, segments (the
-        partition of the shard's doc-id space induced by the query terms'
-        block boundaries) are scored in upper-bound order against a running
-        local theta; once the query's top-k is full, segments — and
-        therefore blocks — that cannot beat theta are never varint-decoded.
-        Block decodes are cached PER TERM and shared across all queries in
-        the task (a hot term's postings decode once per shard, not once per
-        query). Same safety argument as the driver path: bounds are true
-        upper bounds in the SAME float association as the scorer, pruning
-        is strict, segments are disjoint so every kept doc's score is
-        complete."""
+        """Score every query of this bucket against one shard's blobs: one
+        ``score_shard`` call per query, each starting from an empty top-k
+        (theta is local to the task). Block decodes are cached PER TERM
+        and shared across all queries in the task (a hot term's postings
+        decode once per shard, not once per query)."""
         pk, shard, qb = key[0], int(key[1]), int(key[2])
         shard_base = shard * shard_size
         avgdl = avgdl_map.get(pk)
         queries = queries_by_bucket.get(qb)
         if avgdl is None or not queries:
             return _empty_scored()
-        mask_bits = None
+        mask = None
         if has_filter:
-            mask_bits = np.unpackbits(
+            bits = np.unpackbits(
                 np.frombuffer(pdf["allowed_bm"].iloc[0], dtype=np.uint8)
             ).astype(bool)
-        term_rows: dict[str, tuple] = {}
-        for term, data, n, bl, bm, off in zip(
-            pdf["term"], pdf["data"], pdf["n"],
-            pdf["block_last"], pdf["block_max"], pdf["block_off"],
-        ):
-            term_rows[term] = (
-                bytes(data),
-                int(n),
-                np.asarray(bl, dtype=np.int64),
-                np.asarray(bm, dtype=np.float64),
-                (
-                    np.asarray(off, dtype=np.int64)
-                    if off is not None
-                    else None
-                ),
-            )
-        dec_cache: dict[str, dict] = {}
 
-        def decoded_blocks(term: str, need: np.ndarray | None):
-            """(ids, tfs, dls) for the given block ids of one term (None =
-            full decode for legacy blobs without offsets), via the per-term
-            cache shared across every query in this task."""
-            data, n, bl, _bm, off = term_rows[term]
-            cache_t = dec_cache.setdefault(term, {})
-            if need is None or off is None:
-                full = cache_t.get("full")
-                if full is None:
-                    full = codec.unpack_postings(data, n, shard_base)
-                    cache_t["full"] = full
-                return full
-            nl = need.tolist()
-            new = [b_ for b_ in nl if b_ not in cache_t]
-            if new:
-                i_n, t_n, d_n = codec.unpack_blocks(
-                    data, n, shard_base, bl, off, np.asarray(new, np.int64)
-                )
-                o = 0
-                for b_ in new:
-                    s_ = min((b_ + 1) * codec.BLOCK, n) - b_ * codec.BLOCK
-                    cache_t[b_] = (
-                        i_n[o : o + s_],
-                        t_n[o : o + s_],
-                        d_n[o : o + s_],
-                    )
-                    o += s_
-            if len(nl) == 1:
-                return cache_t[nl[0]]
-            ids = np.concatenate([cache_t[b_][0] for b_ in nl])
-            tfs = np.concatenate([cache_t[b_][1] for b_ in nl])
-            dls = np.concatenate([cache_t[b_][2] for b_ in nl])
-            return ids, tfs, dls
+            def mask(ids):
+                return bits[ids - shard_base]
+
+        raw_by_term = {
+            term: _raw_blob(*cols)
+            for term, *cols in zip(pdf["term"], *(pdf[c] for c in _BLOB_COLS))
+        }
+        dec_cache: dict = {}
+
+        def decode(term, raw, need):
+            return _decode_blocks(dec_cache, term, raw, shard_base, need)
 
         frames = []
         for qid, tq in queries:
-            entries = []
+            terms = []
             for term, qtf in tq:
                 idf = idf_map.get((pk, term))
-                if idf is None or term not in term_rows:
-                    continue
-                entries.append((float(qtf) * float(idf), term))
-            if not entries:
+                if idf is not None and term in raw_by_term:
+                    terms.append((qtf * idf, term, raw_by_term[term]))
+            if not terms:
                 continue
-            bounds = np.unique(
-                np.concatenate([term_rows[t][2] for _, t in entries])
+            ids, scores, _ = score_shard(
+                terms, shard_base, avgdl, k1, b, group_limit,
+                np.empty(0, dtype=np.float64), decode, mask,
             )
-            nseg = len(bounds)
-            seg_ub = np.zeros(nseg)
-            covers = []
-            for w, t in entries:
-                bl, bm = term_rows[t][2], term_rows[t][3]
-                ci = np.searchsorted(bl, bounds)
-                valid = ci < len(bl)
-                seg_ub[valid] += w * bm[ci[valid]]
-                covers.append((ci, valid))
-            order = np.argsort(-seg_ub, kind="stable")
-
-            theta = -np.inf
-            top_buf = np.empty(0, dtype=np.float64)
-            kept_ids, kept_scores = [], []
-            count = 0
-            CHUNK = 64
-            pos = 0
-            while pos < nseg:
-                chunk = order[pos : pos + CHUNK]
-                pos += CHUNK
-                if count >= group_limit:
-                    chunk = chunk[seg_ub[chunk] >= theta]
-                    if len(chunk) == 0:
-                        break  # order is ub-descending: the rest is dead too
-                sel_mask = np.zeros(nseg, dtype=bool)
-                sel_mask[chunk] = True
-                docs_l, contrib_l = [], []
-                for t_i, (w, t) in enumerate(entries):
-                    ci, valid = covers[t_i]
-                    need = np.unique(ci[sel_mask & valid])
-                    if len(need) == 0:
-                        continue
-                    legacy = term_rows[t][4] is None
-                    ids, tfs, dls = decoded_blocks(
-                        t, None if legacy else need
-                    )
-                    keep = sel_mask[np.searchsorted(bounds, ids)]
-                    if mask_bits is not None:
-                        # reference semantics: non-allowed docs skipped
-                        # during traversal (bm25.dart:644); mask-only,
-                        # bounds stay valid
-                        keep = keep & mask_bits[ids - shard_base]
-                    if not keep.any():
-                        continue
-                    ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                    tfs = tfs.astype(np.float64)
-                    norm = (1.0 - b) + b * dls.astype(np.float64) / avgdl
-                    contrib_l.append(
-                        w * (tfs * (k1 + 1.0) / (tfs + k1 * norm))
-                    )
-                    docs_l.append(ids)
-                if not docs_l:
-                    continue
-                docs_cat = np.concatenate(docs_l)
-                contrib = np.concatenate(contrib_l)
-                dense = np.bincount(docs_cat - shard_base, weights=contrib)
-                nz = np.flatnonzero(dense)
-                kept_ids.append(nz + shard_base)
-                kept_scores.append(dense[nz])
-                count += len(nz)
-                top_buf = np.concatenate((top_buf, dense[nz]))
-                if len(top_buf) > group_limit:
-                    top_buf = np.partition(top_buf, -group_limit)[-group_limit:]
-                if len(top_buf) >= group_limit:
-                    theta = top_buf.min()
-            if not kept_ids:
-                continue
-            uniq = np.concatenate(kept_ids)  # segments disjoint -> unique
-            acc = np.concatenate(kept_scores)
-            k = min(group_limit, len(uniq))
-            if k < len(uniq):
+            if len(ids) > group_limit:
                 # exact cut with the global (score desc, doc_id asc)
                 # tie-break: an equal-scored doc at the k boundary must not
                 # be dropped by an order-agnostic partition
-                idx = np.lexsort((uniq, -acc))[:k]
-            else:
-                idx = np.arange(len(uniq))
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.int64(qid),
-                        "pk": pk,
-                        "doc_id": uniq[idx],
-                        "score": acc[idx],
-                    }
+                sel = np.lexsort((ids, -scores))[:group_limit]
+                ids, scores = ids[sel], scores[sel]
+            if len(ids):
+                frames.append(
+                    pd.DataFrame(
+                        {
+                            "query_id": np.int64(qid),
+                            "pk": pk,
+                            "doc_id": ids,
+                            "score": scores,
+                        }
+                    )
                 )
-            )
         if not frames:
             return _empty_scored()
         return pd.concat(frames, ignore_index=True)
@@ -1029,13 +832,12 @@ def search_packed(
     force_cluster: bool = False,
     cluster_stats: dict | None = None,
 ) -> DataFrame:
-    """Top-k over the packed index. Same semantics/schema as
-    searcher.search_batch. Chooses the driver fast path (with shard-level
-    block-max pruning when ``prune``) or the cluster path automatically.
+    """Top-k over the packed index — the engine behind
+    searcher.search_batch (same semantics/schema). Chooses the driver fast
+    path or the cluster path automatically; ``prune=False`` turns off the
+    shard- and block-level pruning on the driver path (reference mode).
     ``cluster_stats``: pass a dict to capture the cluster path's shuffle
     shape (bucket counts, per-task input rows — one extra agg job)."""
-    if index.packed is None:
-        raise ValueError("index is not packed — call pack_index() first")
     if limit < 1:
         raise ValueError("limit must be >= 1")
     spark = index.spark

@@ -1,19 +1,16 @@
-"""Query-time top-k BM25 scoring (reference operators O10-O15, O17-O18).
+"""Query-time top-k BM25 API (reference operators O10-O15, O17-O18).
 
-Distributed plan per batch of queries:
+Every search scores the packed posting blobs through one per-shard
+block-max WAND kernel (``packed.score_shard``); ``packed.search_packed``
+picks where that kernel runs — in-process on the driver for interactive
+queries, inside a grouped ``applyInPandas`` for big batches and filters.
+This module holds the public entry points plus the pieces both routes
+share: the result schema, the filter predicate and the per-pk stats.
 
-    postings scan, term IN (...) pushed to parquet/Iceberg (min-max + bloom)
-      -> explode shards (narrow)
-      -> [optional] left-semi join vs filter-allowed doc_ids  (O11)
-      -> broadcast join query terms (qtf, idf)                (O10/O12)
-      -> hash agg (pk, query_id, doc_id) sum of per-term contributions
-      -> per-query top-k via window rank                       (O13)
-
-The score expression is the exact reference formula
-(lib/src/bm25.dart:646-649):  idf * tf*(k1+1)/(tf + k1*((1-b)+b*dl/avgdl)),
-with query-term multiplicity folded in as a qtf multiplier (bm25.dart:635
-iterates duplicate tokens; multiplication is identical to repeated
-addition). All arithmetic stays in whole-stage-codegen'd JVM expressions.
+The score is the exact reference formula (lib/src/bm25.dart:646-649):
+idf * tf*(k1+1)/(tf + k1*((1-b)+b*dl/avgdl)), with query-term multiplicity
+folded in as a qtf multiplier (bm25.dart:635 iterates duplicate tokens;
+multiplication is identical to repeated addition).
 
 Ties: the reference's tie order is unspecified (score-only comparator,
 bm25.dart:740,796); we break deterministically by doc_id ASC.
@@ -21,7 +18,7 @@ bm25.dart:740,796); we break deterministically by doc_id ASC.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -32,7 +29,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from bm25_spark.functions.analyzer import query_term_counts
 from bm25_spark.operators.indexer import BM25Index
 
 RESULT_SCHEMA = StructType(
@@ -43,19 +39,6 @@ RESULT_SCHEMA = StructType(
         StructField("score", DoubleType(), False),
         StructField("rank", IntegerType(), False),
     ]
-)
-
-_QDF_SCHEMA = StructType(
-    [
-        StructField("query_id", LongType(), False),
-        StructField("term", StringType(), False),
-        StructField("qtf", IntegerType(), False),
-    ]
-)
-
-
-_QIDF_SCHEMA = (
-    "query_id long, pk string, term string, qtf int, idf double, avgdl double"
 )
 
 _EMPTY_RESULT_SQL = (
@@ -93,28 +76,6 @@ def _stats_map(index: BM25Index, partition_keys) -> dict:
     return cache
 
 
-def _query_frame_with_idf(index: BM25Index, qrows, partition_keys) -> DataFrame:
-    """(query_id, pk, term, qtf, idf, avgdl) built driver-side from the
-    term-dictionary probe; broadcast into the single scoring join."""
-    needed = sorted({t for _, t, _ in qrows})
-    t = index.terms.filter(F.col("term").isin(needed)).select("pk", "term", "idf")
-    if partition_keys is not None:
-        t = t.filter(F.col("pk").isin(partition_keys))
-    idf_rows = t.collect()
-    smap = _stats_map(index, partition_keys)
-    by_term: dict[str, list] = {}
-    for qid, term, qtf in qrows:
-        by_term.setdefault(term, []).append((qid, qtf))
-    rows = []
-    for r in idf_rows:
-        st = smap.get(r["pk"])
-        if st is None:
-            continue
-        for qid, qtf in by_term.get(r["term"], ()):
-            rows.append((qid, r["pk"], r["term"], qtf, float(r["idf"]), float(st[1])))
-    return index.spark.createDataFrame(rows, _QIDF_SCHEMA)
-
-
 def _filter_predicate(index: BM25Index, flt: dict) -> F.Column:
     """Reference filter semantics (bm25.dart:603-629): union of values
     within a field, intersection across fields; docs with a NULL/missing
@@ -144,7 +105,6 @@ def search_batch(
     stopwords=None,
     partition_keys: list[str] | None = None,
     per_partition_limit: int | None = None,
-    use_packed: bool | None = None,
 ) -> DataFrame:
     """Score a batch of (query_id, query_text). Returns
     (query_id, pk, doc_id, score, rank) with rank 1..limit per query.
@@ -153,101 +113,17 @@ def search_batch(
     plain index has pk=''). ``per_partition_limit``: cap candidates per pk
     BEFORE the global top-k (reproduces searchMany's default-limit-10 inner
     searches, partitioned_bm25.dart:143-153).
-
-    ``use_packed``: None (default) routes through the packed numpy scorer
-    whenever the index carries packed postings; False forces the JVM
-    explode+agg plan over the decoded array view (kept for cross-checks).
     """
-    if limit < 1:
-        raise ValueError("limit must be >= 1")
-    if use_packed is not False and index.packed is not None:
-        from bm25_spark.operators.packed import search_packed
+    from bm25_spark.operators.packed import search_packed
 
-        return search_packed(
-            index,
-            queries,
-            limit=limit,
-            flt=flt,
-            stopwords=stopwords,
-            partition_keys=partition_keys,
-            per_partition_limit=per_partition_limit,
-        )
-    spark = index.spark
-    stop = stopwords if stopwords is not None else index.stopwords
-    qrows = []
-    for qid, qtext in queries:
-        for term, qtf in query_term_counts(qtext, stop).items():
-            qrows.append((qid, term, qtf))
-    if not qrows:
-        return empty_result(spark)
-
-    needed_terms = sorted({t for _, t, _ in qrows})
-
-    p = index.postings.filter(F.col("term").isin(needed_terms))
-    if partition_keys is not None:
-        p = p.filter(F.col("pk").isin(partition_keys))
-
-    # Driver-side dictionary lookup (exactly a search engine's term-dict
-    # probe): the ≤|q| idf rows and the per-pk avgdl scalars are collected
-    # once and folded into a single broadcast-joined frame — the scoring
-    # job then has ONE join, not three.
-    q_terms = F.broadcast(
-        _query_frame_with_idf(index, qrows, partition_keys)
-    )
-
-    e = p.select(
-        "pk", "term", F.explode("postings").alias("post")
-    ).select(
-        "pk",
-        "term",
-        F.col("post.doc_id").alias("doc_id"),
-        F.col("post.tf").alias("tf"),
-        F.col("post.dl").alias("dl"),
-    )
-
-    if flt:
-        pred = _filter_predicate(index, flt)
-        allowed = index.docs.filter(pred).select("pk", "doc_id")
-        e = e.join(allowed, ["pk", "doc_id"], "left_semi")
-
-    k1, b = F.lit(index.k1), F.lit(index.b)
-    contrib = (
-        F.col("qtf")
-        * F.col("idf")
-        * F.col("tf")
-        * (k1 + F.lit(1.0))
-        / (
-            F.col("tf")
-            + k1
-            * (
-                (F.lit(1.0) - b)
-                + b * F.col("dl") / F.col("avgdl")
-            )
-        )
-    )
-    scored = (
-        e.join(q_terms, ["pk", "term"])
-        .groupBy("query_id", "pk", "doc_id")
-        .agg(F.sum(contrib).alias("score"))
-    )
-
-    if per_partition_limit is not None:
-        w_pk = Window.partitionBy("query_id", "pk").orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        )
-        scored = (
-            scored.withColumn("prank", F.row_number().over(w_pk))
-            .filter(F.col("prank") <= per_partition_limit)
-            .drop("prank")
-        )
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= limit)
-        .select("query_id", "pk", "doc_id", "score", "rank")
+    return search_packed(
+        index,
+        queries,
+        limit=limit,
+        flt=flt,
+        stopwords=stopwords,
+        partition_keys=partition_keys,
+        per_partition_limit=per_partition_limit,
     )
 
 

@@ -107,7 +107,7 @@ class OracleBM25:
             for t in d.terms:
                 tf_map.setdefault(t, {}).setdefault(d.doc_id, 0)
                 tf_map[t][d.doc_id] += 1
-        self.postings = {
+        self.term_docs = {
             t: sorted(m.items()) for t, m in tf_map.items()
         }
         self.idf = {t: idf(n, len(m)) for t, m in tf_map.items()}
@@ -160,10 +160,10 @@ class OracleBM25:
             return []
         scores: dict[int, float] = {}
         for t in toks:  # with multiplicity — reference bm25.dart:635
-            if t not in self.postings:
+            if t not in self.term_docs:
                 continue
             w = self.idf[t]
-            for doc_id, tf in self.postings[t]:
+            for doc_id, tf in self.term_docs[t]:
                 if allowed is not None and doc_id not in allowed:
                     continue
                 scores[doc_id] = scores.get(doc_id, 0.0) + w * tf * (

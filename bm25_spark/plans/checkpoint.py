@@ -145,7 +145,7 @@ def checkpointed_build(
             tables = [
                 ("docs", idx.docs),
                 ("terms", idx.terms),
-                ("postings", idx.packed if idx.packed is not None else idx.postings),
+                ("postings", idx.packed),
                 ("stats", idx.stats),
             ]
             if idx.doclens is not None:
@@ -208,16 +208,12 @@ def checkpointed_build(
 
 def read_checkpointed_index(spark: SparkSession, root: str, shard_size: int | None = None):
     """Load an index written by checkpointed_build (pk recovered from the
-    partition directories)."""
-    from bm25_spark.operators.indexer import (
-        DEFAULT_SHARD_SIZE,
-        BM25Index,
-        decoded_postings_view,
-        read_meta,
-    )
+    partition directories). Same reader rule as indexer.read_index: the
+    decode-critical shard_size comes from meta.json or the argument, never
+    from a default."""
+    from bm25_spark.operators.indexer import _index_from_tables, read_meta
 
     meta = read_meta(os.path.join(root, "meta.json")) or {}
-    shard_size = shard_size or meta.get("shard_size") or DEFAULT_SHARD_SIZE
 
     def rd(tname: str) -> DataFrame:
         df = spark.read.option("basePath", os.path.join(root, tname)).parquet(
@@ -225,31 +221,7 @@ def read_checkpointed_index(spark: SparkSession, root: str, shard_size: int | No
         )
         return df.withColumn("pk", F.col("pk").cast("string"))
 
-    post = rd("postings")
-    packed = post if "data" in post.columns else None
-    doclens = (
-        rd("doclens")
-        if os.path.isdir(os.path.join(root, "doclens"))
-        else None
-    )
-    return BM25Index(
-        spark=spark,
-        docs=rd("docs"),
-        terms=rd("terms"),
-        postings=(
-            decoded_postings_view(packed, shard_size)
-            if packed is not None
-            else post
-        ),
-        packed=packed,
-        stats=rd("stats"),
-        doclens=doclens,
-        k1=meta.get("k1", 1.2),
-        b=meta.get("b", 0.75),
-        index_fields=tuple(meta.get("index_fields", ("role", "tool", "conv_id"))),
-        stopwords=(
-            frozenset(meta["stopwords"]) if meta.get("stopwords") else None
-        ),
-        partitioned=True,
-        shard_size=shard_size,
+    return _index_from_tables(
+        spark, root, rd, meta, os.path.isdir(os.path.join(root, "doclens")),
+        shard_size=shard_size, partitioned=True,
     )

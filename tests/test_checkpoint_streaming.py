@@ -187,7 +187,6 @@ def test_merge_after_warm_serves_fresh_postings(spark):
     # in-place rebind: seg_a's caches are warm; swapping its packed table
     # for the merged one then invalidating must serve the MERGED postings
     seg_a.packed = merged.packed
-    seg_a.postings = merged.postings
     seg_a.stats = merged.stats
     seg_a.terms = merged.terms
     seg_a.docs = merged.docs

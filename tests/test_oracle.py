@@ -211,5 +211,5 @@ def test_rocchio_expansion():
 def test_idf_formula():
     eng = OracleBM25(GOLDEN_CORPUS)
     n = 5
-    df_dog = len(eng.postings["dog"])
+    df_dog = len(eng.term_docs["dog"])
     assert eng.idf["dog"] == math.log((n - df_dog + 0.5) / (df_dog + 0.5) + 1)

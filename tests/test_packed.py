@@ -1,16 +1,18 @@
-"""Packed index (delta+varint blobs + grouped numpy scoring) must be
-rank- and score-identical to the plain DataFrame path and the oracle."""
+"""Packed index (delta+varint blobs + the shared per-shard scoring kernel)
+must be rank- and score-identical to the oracle on both the driver and the
+cluster path, and the two paths bit-identical to each other."""
 
 import numpy as np
 import pytest
 
 from bm25_spark.functions import codec
-from bm25_spark.operators import searcher
 from bm25_spark.operators.indexer import build_index
-from bm25_spark.operators.packed import pack_index, search_packed
+from bm25_spark.operators.packed import search_packed
+from bm25_spark.oracle import OracleBM25
 from bm25_spark.sources.datagen import (
     golden_transcripts,
     synthetic_transcripts,
+    transcripts_rows_for_oracle,
 )
 
 GOLDEN = {
@@ -22,7 +24,7 @@ GOLDEN = {
 
 @pytest.fixture(scope="module")
 def packed_golden(spark):
-    idx = pack_index(build_index(golden_transcripts(spark)))
+    idx = build_index(golden_transcripts(spark))
     idx.packed.persist()
     idx.packed.count()
     yield idx
@@ -32,7 +34,7 @@ def packed_golden(spark):
 @pytest.fixture(scope="module")
 def packed_synth(spark):
     df = synthetic_transcripts(spark, n_convs=30, seed=11)
-    idx = pack_index(build_index(df, shard_size=64))
+    idx = build_index(df, shard_size=64)
     idx.persist()
     idx.packed.persist()
     idx.packed.count()
@@ -41,8 +43,38 @@ def packed_synth(spark):
     idx.packed.unpersist()
 
 
+@pytest.fixture(scope="module")
+def synth_oracle(packed_synth):
+    rows = packed_synth.docs.orderBy("conv_id", "turn_idx").collect()
+    return OracleBM25(
+        transcripts_rows_for_oracle(rows),
+        index_fields=["role", "tool", "conv_id"],
+    )
+
+
 def _ranked(df):
     return [(r["doc_id"], r["score"]) for r in df.orderBy("rank").collect()]
+
+
+def _assert_matches_oracle(idx, oracle, q, limit, flt=None):
+    """Driver and cluster path: ids and ranks exactly the oracle's, scores
+    within 1e-9 (the oracle adds a repeated query term's contribution
+    qtf times; the engine multiplies by qtf)."""
+    want = oracle.search(q, limit=limit, flt=flt)
+    assert want, q
+    for force_cluster in (False, True):
+        res = search_packed(
+            idx, [(0, q)], limit=limit, flt=flt, force_cluster=force_cluster
+        )
+        got = [
+            (r["rank"], r["doc_id"], r["score"])
+            for r in res.orderBy("rank").collect()
+        ]
+        assert [(rk, d) for rk, d, _ in got] == [
+            (rk, d) for rk, (d, _) in enumerate(want, start=1)
+        ], (q, force_cluster)
+        for (_, _, gs), (_, ws) in zip(got, want):
+            assert abs(gs - ws) < 1e-9, (q, force_cluster)
 
 
 def test_codec_property_roundtrip():
@@ -137,30 +169,20 @@ def test_packed_golden_scores(packed_golden):
             assert abs(gs - es) < 5e-5
 
 
-def test_packed_matches_plain_path(packed_synth):
+def test_packed_matches_plain_path(packed_synth, synth_oracle):
     queries = [
         "spark query data", "fox dog", "cat cat cat", "table join filter",
         "error retry plan", "value key row column",
     ]
-    for i, q in enumerate(queries):
-        plain = searcher.search_batch(
-            packed_synth, [(i, q)], limit=20, use_packed=False
-        )
-        packd = search_packed(packed_synth, [(i, q)], limit=20)
-        a = [(r["doc_id"], round(r["score"], 10)) for r in plain.orderBy("rank").collect()]
-        b = [(r["doc_id"], round(r["score"], 10)) for r in packd.orderBy("rank").collect()]
-        assert a == b, q
+    for q in queries:
+        _assert_matches_oracle(packed_synth, synth_oracle, q, limit=20)
 
 
-def test_packed_filtered_matches_plain(packed_synth):
+def test_packed_filtered_matches_plain(packed_synth, synth_oracle):
     flt = {"role": ["user", "assistant"]}
-    plain = searcher.search_batch(
-        packed_synth, [(0, "spark data")], limit=15, flt=flt, use_packed=False
+    _assert_matches_oracle(
+        packed_synth, synth_oracle, "spark data", limit=15, flt=flt
     )
-    packd = search_packed(packed_synth, [(0, "spark data")], limit=15, flt=flt)
-    a = [(r["doc_id"], round(r["score"], 10)) for r in plain.orderBy("rank").collect()]
-    b = [(r["doc_id"], round(r["score"], 10)) for r in packd.orderBy("rank").collect()]
-    assert a == b
 
 
 def test_pruning_and_cluster_paths_identical(packed_synth):
@@ -176,7 +198,7 @@ def test_pruning_and_cluster_paths_identical(packed_synth):
             search_packed(packed_synth, [(i, q)], limit=12, force_cluster=True),
         ]
         outs = [
-            [(r["doc_id"], round(r["score"], 10)) for r in v.orderBy("rank").collect()]
+            [(r["doc_id"], r["score"]) for r in v.orderBy("rank").collect()]
             for v in variants
         ]
         assert outs[0] == outs[1] == outs[2], q
@@ -188,8 +210,8 @@ def test_filtered_driver_vs_cluster(packed_synth):
     clu = search_packed(
         packed_synth, [(0, "spark data")], limit=10, flt=flt, force_cluster=True
     )
-    a = [(r["doc_id"], round(r["score"], 10)) for r in drv.orderBy("rank").collect()]
-    b = [(r["doc_id"], round(r["score"], 10)) for r in clu.orderBy("rank").collect()]
+    a = [(r["doc_id"], r["score"]) for r in drv.orderBy("rank").collect()]
+    b = [(r["doc_id"], r["score"]) for r in clu.orderBy("rank").collect()]
     assert a == b
 
 
@@ -284,14 +306,25 @@ def test_block_wand_identical_and_active(spark, monkeypatch):
     idx.packed.count()
     assert idx.packed.select(F.max(F.size("block_max"))).first()[0] >= 2
 
-    calls = {"n": 0}
+    calls = {"n": 0, "blocks": 0}
     real = codec.unpack_blocks
 
     def counting(*a, **kw):
         calls["n"] += 1
+        calls["blocks"] += len(a[5])
         return real(*a, **kw)
 
     monkeypatch.setattr(codec, "unpack_blocks", counting)
+    # every decode goes through unpack_blocks, so the call count alone no
+    # longer shows pruning: on a cold block cache, the last shard visited
+    # (theta = the spike score by then) must skip its block 1
+    search_packed(idx, [(0, "alpha")], limit=3, prune=True).collect()
+    n_alpha_blocks = (
+        idx.packed.filter(F.col("term") == "alpha")
+        .select(F.sum(F.size("block_max")))
+        .first()[0]
+    )
+    assert 0 < calls["blocks"] < n_alpha_blocks, calls
     queries = [(0, "alpha"), (1, "alpha beta"), (2, "gamma w3")]
     for limit in (3, 10):
         a = search_packed(idx, queries, limit=limit, prune=True).collect()
@@ -434,7 +467,7 @@ def test_cluster_batch_skew_rows_bounded(spark):
     from bm25_spark.sources.datagen import TRANSCRIPT_SCHEMA
 
     df = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
-    idx = pack_index(build_index(df, shard_size=64))
+    idx = build_index(df, shard_size=64)
     idx.packed.persist().count()
 
     # 12 queries, every one hitting the hot term (worst-case skew)

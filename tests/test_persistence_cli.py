@@ -58,8 +58,11 @@ def test_meta_roundtrip_nondefault_shard_size(spark, tmp_path):
 
 def test_read_index_refuses_to_guess_shard_size(spark, tmp_path):
     import os
+    import shutil
 
     import pytest
+
+    from bm25_spark.plans import checkpoint
 
     df = synthetic_transcripts(spark, n_convs=6, seed=5)
     idx = build_index(df, shard_size=64)
@@ -72,6 +75,32 @@ def test_read_index_refuses_to_guess_shard_size(spark, tmp_path):
     idx2 = read_index(spark, root, shard_size=64)
     q = "spark data"
     assert _ranked(search(idx2, q, limit=5)) == _ranked(search(idx, q, limit=5))
+
+    # the checkpointed reader follows the same rule: no meta.json, no
+    # guessed default shard_size
+    ck = str(tmp_path / "ck_nometa")
+    checkpoint.checkpointed_build(
+        df, ck, partition_col="role", build_kwargs={"shard_size": 64}
+    )
+    want = _ranked(
+        search_in(checkpoint.read_checkpointed_index(spark, ck), "user", q, limit=5)
+    )
+    os.remove(os.path.join(ck, "meta.json"))
+    with pytest.raises(ValueError, match="shard_size"):
+        checkpoint.read_checkpointed_index(spark, ck)
+    idx3 = checkpoint.read_checkpointed_index(spark, ck, shard_size=64)
+    assert _ranked(search_in(idx3, "user", q, limit=5)) == want
+
+    # a postings table without block offsets is not a layout any scorer
+    # reads: the reader refuses it instead of guessing
+    old = str(tmp_path / "idx_no_block_off")
+    shutil.copytree(root, old)
+    shutil.rmtree(os.path.join(old, "postings"))
+    spark.read.parquet(os.path.join(root, "postings")).drop(
+        "block_off"
+    ).write.parquet(os.path.join(old, "postings"))
+    with pytest.raises(ValueError, match="rebuild the index"):
+        read_index(spark, old, shard_size=64)
 
 
 def test_cli_build_and_search(spark, tmp_path, capsys):
