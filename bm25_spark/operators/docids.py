@@ -5,7 +5,7 @@ The reference assigns dense ids 0..N-1 in ingestion order
 ``(conv_id, turn_idx)`` ordering mandated by the input contract, so
 ``doc_id = rank over (order_cols) - 1``.
 
-Three strategies:
+Two strategies:
 
 - ``window``: ``row_number() OVER (ORDER BY ...)`` — exact but funnels all
   rows through ONE task for the ranking (fine up to ~10M rows; never at
@@ -20,17 +20,8 @@ Three strategies:
   scan (both touch only the order columns; parquet/Iceberg read ~nothing
   else) + the one unavoidable shuffle that routes each bucket to a task.
   doc_id = driver-computed bucket offset + within-bucket sorted position.
-- ``range``: previous default, kept for parity tests. Range-repartition +
-  sortWithinPartitions + LOCAL-CHECKPOINT + per-partition offset cumsum.
-  The localCheckpoint is correctness-critical there (repartitionByRange
-  picks boundaries by sampling, so a plan CLONE — Spark's relation dedup
-  when two filters of this output are unioned — could partition
-  differently and invalidate the offsets; checkpointing truncates lineage
-  to the materialized partitions). That safety costs a full corpus
-  materialization, which is why ``sample`` replaces it as the default: at
-  10^12 rows the doc-id pass must not double storage traffic.
 
-All produce the identical doc_id column (asserted in tests).
+Both produce the identical doc_id column (asserted in tests).
 """
 
 from __future__ import annotations
@@ -63,7 +54,7 @@ def _key_encoder(fields):
         else:
             raise ValueError(
                 f"order column {f.name!r} has unsupported type {t} for "
-                "method='sample' (use strings/ints, or method='range')"
+                "method='sample' (use strings/ints, or method='window')"
             )
 
     def enc_one(vals) -> bytes:
@@ -95,47 +86,7 @@ def assign_doc_ids(
         return df.withColumn("doc_id", F.row_number().over(w).cast("long") - 1)
     if method == "sample":
         return _assign_sampled(df, order_cols, num_partitions)
-    if method != "range":
-        raise ValueError(f"unknown method {method!r}")
-
-    num_partitions = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # the partition index is STAMPED INTO THE DATA at checkpoint
-    # materialization and read back from the rows — never from
-    # TaskContext.partitionId(), which is renumbered by any enclosing
-    # union/coalesce and would silently shift every offset
-    parted = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    # pass 1: rows per physical partition (P rows collected — tiny)
-    counts = parted.groupBy("_pid").count().collect()
-    by_pid = {r["_pid"]: r["count"] for r in counts}
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in range(max(by_pid, default=-1) + 1):
-        offsets[pid] = acc
-        acc += by_pid.get(pid, 0)
-
-    out_schema = StructType(
-        df.schema.fields + [StructField("doc_id", LongType(), False)]
-    )
-
-    def add_ids(iterator):
-        pos = None
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            if pos is None:
-                pos = offsets.get(int(pdf["_pid"].iloc[0]), 0)
-            n = len(pdf)
-            pdf = pdf.drop(columns=["_pid"])
-            pdf["doc_id"] = range(pos, pos + n)
-            pos += n
-            yield pdf
-
-    return parted.mapInPandas(add_ids, schema=out_schema)
+    raise ValueError(f"unknown method {method!r}")
 
 
 def _assign_sampled(

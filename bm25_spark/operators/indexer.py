@@ -58,6 +58,17 @@ DEFAULT_K1 = 1.2
 DEFAULT_B = 0.75
 DEFAULT_SHARD_SIZE = 1 << 20  # docs per posting shard
 
+# The index tables under their persisted names, in COMPUTE order: written
+# or counted in this order, each job computes (and caches, when pinned)
+# every upstream it is the first to scan — stats' job runs the
+# tokenize+pack map stage, terms' job runs the merge shuffle, and the
+# rest read what those two left behind. Readers load the same names.
+INDEX_TABLES = ("stats", "terms", "postings", "doclens", "docs")
+
+
+def _is_cached(df: DataFrame) -> bool:
+    return df.storageLevel != StorageLevel.NONE
+
 
 @dataclass
 class BM25Index:
@@ -76,59 +87,62 @@ class BM25Index:
     enc: DataFrame | None = None  # tokenized docs (with per-doc term counts)
     doclens: DataFrame | None = None  # (pk, doc_id, dl) — derived view
 
-    def _physical(self) -> tuple[DataFrame, ...]:
-        """Index tables in DEPENDENCY order (stats -> postings -> terms ->
-        docs). Spark's CacheManager freezes a persisted plan's physical form
-        at registration time, so a downstream table must be registered
-        AFTER its upstream or its frozen plan will recompute the upstream
-        instead of reading the cache (terms derives from packed, packed
-        from stats)."""
-        return (self.stats, self.packed, self.terms, self.docs)
+    def tables(self) -> list[tuple[str, DataFrame]]:
+        """(persisted name, table) pairs in INDEX_TABLES (compute) order;
+        doclens only when the index has it."""
+        by_name = {
+            "stats": self.stats, "terms": self.terms, "postings": self.packed,
+            "doclens": self.doclens, "docs": self.docs,
+        }
+        return [(n, by_name[n]) for n in INDEX_TABLES if by_name[n] is not None]
+
+    def _pin(self) -> list[DataFrame]:
+        """Persist ``enc`` then ``packed`` — DEPENDENCY order: Spark's
+        CacheManager freezes a persisted plan's physical form at
+        registration time, so packed registered after enc reads enc's
+        cache instead of re-tokenizing, and every table planned later reads
+        both. An index whose packed table is already cached (materialize,
+        or the caller's own persist) is left alone. Returns what it
+        pinned."""
+        if _is_cached(self.packed):
+            return []
+        pinned = [df for df in (self.enc, self.packed) if df is not None]
+        for df in pinned:
+            df.persist(StorageLevel.MEMORY_AND_DISK)
+        return pinned
 
     def persist(self, persist_docs: bool = True) -> "BM25Index":
-        for df in self._physical():
-            if df is self.docs and not persist_docs:
-                continue
-            df.persist(StorageLevel.MEMORY_AND_DISK)
-        return self
-
-    def materialize(self, persist_docs: bool = True) -> "BM25Index":
-        """Force the build. ``enc`` (the tokenize output) is pinned and
-        computed BEFORE the index tables are even marked for caching:
-        Spark's CacheManager freezes a persisted plan's physical form at
-        registration time, so registering docs/terms/postings/stats first
-        would capture plans WITHOUT the enc InMemoryRelation substitution
-        and the tokenizer UDF would re-run once per derived table.
+        """Register every table for caching: the pins first (_pin), then
+        the rest in compute order — each registers after its upstreams.
 
         ``persist_docs=False`` skips caching the docs table — when the
         source corpus is already cached (or is a columnar table scan),
         docs is a trivial projection of it and a second full copy in the
         block store is pure memory-bandwidth waste; filters read through
         the parent instead."""
-        pin = self.enc
-        if pin is not None:
-            pin.persist(StorageLevel.MEMORY_AND_DISK)
+        self._pin()
+        for name, df in self.tables():
+            if (persist_docs or name != "docs") and not _is_cached(df):
+                df.persist(StorageLevel.MEMORY_AND_DISK)
+        return self
+
+    def materialize(self, persist_docs: bool = True) -> "BM25Index":
+        """Force the build: persist (above), count the cached tables in
+        compute order, then drop ``enc`` — every table derived from it,
+        doclens included, is cached by then."""
         self.persist(persist_docs=persist_docs)
-        # Count in COMPUTE order, not registration order: each count's own
-        # job computes-and-caches every uncached upstream it scans, so no
-        # table is materialized by one job and then re-scanned by the
-        # next. stats' job runs the tokenize+pack map stage and caches pin
-        # as a side effect of scanning it; terms' job runs the shuffle
-        # merge and caches packed the same way; the remaining counts are
-        # pure cache reads. (Registration above already happened in
-        # dependency order — that is what freezes the derived plans
-        # against pin's InMemoryRelation.)
-        for df in (self.stats, self.terms, self.packed, self.docs):
-            if df is self.docs and not persist_docs:
-                continue  # not cached: a count would do nothing useful
-            df.count()
-        if pin is not None and pin is not self.docs:
-            pin.unpersist()
+        for name, df in self.tables():
+            if persist_docs or name != "docs":
+                df.count()
+        if self.enc is not None:
+            self.enc.unpersist()
         return self
 
     def unpersist(self) -> None:
-        for df in self._physical():
+        for _, df in self.tables():
             df.unpersist()
+        if self.enc is not None:
+            self.enc.unpersist()
 
     def invalidate_caches(self) -> None:
         """Drop every driver-side query cache (term dictionary, shard
@@ -158,7 +172,6 @@ def build_index(
     k1: float = DEFAULT_K1,
     b: float = DEFAULT_B,
     shard_size: int = DEFAULT_SHARD_SIZE,
-    docid_method: str = "sample",
     id_col: str | None = None,
     chunk_postings: int = 1 << 21,
     check_empty: bool = True,
@@ -184,7 +197,7 @@ def build_index(
     if id_col is not None:
         base = transcripts.withColumn("doc_id", F.col(id_col).cast("long"))
     else:
-        base = assign_doc_ids(transcripts, order_cols=order_cols, method=docid_method)
+        base = assign_doc_ids(transcripts, order_cols=order_cols)
     pk_expr = (
         F.col(partition_col).cast("string") if partition_col else F.lit("")
     )
@@ -854,35 +867,6 @@ def doclens_view(runs: DataFrame) -> DataFrame:
     ).mapInArrow(dec, schema=out_schema)
 
 
-@dataclass
-class IndexPaths:
-    root: str
-
-    @property
-    def docs(self):
-        return f"{self.root}/docs"
-
-    @property
-    def terms(self):
-        return f"{self.root}/terms"
-
-    @property
-    def packed(self):
-        return f"{self.root}/postings"
-
-    @property
-    def stats(self):
-        return f"{self.root}/stats"
-
-    @property
-    def doclens(self):
-        return f"{self.root}/doclens"
-
-    @property
-    def meta(self):
-        return f"{self.root}/meta.json"
-
-
 def index_meta(index: BM25Index) -> dict:
     """Decode-critical + semantic parameters persisted alongside the data.
     shard_size is DECODE-critical (doc_id = shard*shard_size + deltas): a
@@ -992,28 +976,43 @@ def write_index(
     table is the PACKED form (delta+varint blobs + block-max + block
     offsets). meta.json carries shard_size/k1/b/fields/stopwords/
     storage_format so readers cannot silently decode with mismatched
-    parameters."""
-    p = IndexPaths(root)
+    parameters, and is written last.
 
-    def w(df, path):
+    The tables go through _write_tables: an index that is not cached yet
+    has its tokenize output and packed postings pinned for the duration of
+    the write, so the corpus is tokenized once; a materialized index is
+    written from its caches, which stay cached."""
+
+    def save(name: str, df: DataFrame) -> None:
         # hive partitioning treats pk='' (the single-partition sentinel) as
-        # NULL on read — only layout by pk for genuinely partitioned indexes
+        # NULL on read — only layout by pk for genuinely partitioned
+        # indexes; stats stays one small un-partitioned table
         wr = df.write.mode(mode).format(storage_format)
-        if index.partitioned:
+        if index.partitioned and name != "stats":
             wr = wr.partitionBy("pk")
-        wr.save(path)
+        wr.save(f"{root}/{name}")
 
-    w(index.docs, p.docs)
-    w(index.terms, p.terms)
-    w(index.packed, p.packed)
-    if index.doclens is not None:
-        w(index.doclens, p.doclens)
-    index.stats.write.mode(mode).format(storage_format).save(p.stats)
+    _write_tables(index, save)
     if _is_local_path(root):
         os.makedirs(root, exist_ok=True)
     meta = index_meta(index)
     meta["storage_format"] = storage_format
-    _write_meta(meta, p.meta)
+    _write_meta(meta, f"{root}/meta.json")
+
+
+def _write_tables(index: BM25Index, save) -> None:
+    """The one index-table writing loop (write_index, write_index_tables,
+    plans.checkpoint.checkpointed_build): pin (BM25Index._pin), call
+    ``save(name, df)`` for every table in compute order, then unpersist
+    only what was pinned here — the tokenize pipeline runs once per write
+    and a caller's own caches survive it."""
+    pinned = index._pin()
+    try:
+        for name, df in index.tables():
+            save(name, df)
+    finally:
+        for df in pinned:
+            df.unpersist()
 
 
 def _index_from_tables(
@@ -1035,7 +1034,8 @@ def _index_from_tables(
     offsets (the only form the scorers read), and ``shard_size`` is never
     defaulted — it is DECODE-critical (doc_id = shard*shard_size +
     deltas), so guessing it wrong would silently corrupt every doc_id."""
-    packed = rd("postings")
+    tables = {n: rd(n) for n in INDEX_TABLES if n != "doclens" or has_doclens}
+    packed = tables["postings"]
     missing = sorted({"data", "block_off"} - set(packed.columns))
     if missing:
         raise ValueError(
@@ -1057,11 +1057,11 @@ def _index_from_tables(
     stopwords = param("stopwords", None)
     return BM25Index(
         spark=spark,
-        docs=rd("docs"),
-        terms=rd("terms"),
+        docs=tables["docs"],
+        terms=tables["terms"],
         packed=packed,
-        stats=rd("stats"),
-        doclens=rd("doclens") if has_doclens else None,
+        stats=tables["stats"],
+        doclens=tables.get("doclens"),
         k1=float(param("k1", DEFAULT_K1)),
         b=float(param("b", DEFAULT_B)),
         index_fields=tuple(param("index_fields", ("role", "tool", "conv_id"))),
@@ -1089,17 +1089,12 @@ def read_index(
     from meta.json (an index written as Iceberg must not be read as raw
     parquet — the file layout under an Iceberg table dir is not a plain
     parquet dataset)."""
-    p = IndexPaths(root)
-    meta = read_meta(p.meta) or {}
+    meta = read_meta(f"{root}/meta.json") or {}
     if storage_format is None:
         storage_format = meta.get("storage_format", "parquet")
-    paths = {
-        "docs": p.docs, "terms": p.terms, "postings": p.packed,
-        "stats": p.stats, "doclens": p.doclens,
-    }
 
     def rd(table: str) -> DataFrame:
-        df = spark.read.format(storage_format).load(paths[table])
+        df = spark.read.format(storage_format).load(f"{root}/{table}")
         if "pk" in df.columns:
             # hive partition discovery can infer numeric pk values as int;
             # every driver-side cache and RESULT_SCHEMA key pk as string
@@ -1107,7 +1102,7 @@ def read_index(
         return df
 
     return _index_from_tables(
-        spark, root, rd, meta, _path_is_dir(p.doclens),
+        spark, root, rd, meta, _path_is_dir(f"{root}/doclens"),
         shard_size=shard_size, k1=k1, b=b, index_fields=index_fields,
         stopwords=stopwords, partitioned=partitioned,
     )
@@ -1116,9 +1111,6 @@ def read_index(
 # ---------------------------------------------------------------------------
 # Catalog-managed persistence (the production Iceberg route)
 # ---------------------------------------------------------------------------
-
-_INDEX_TABLES = ("docs", "terms", "postings", "stats", "doclens", "meta")
-
 
 def write_index_tables(
     index: BM25Index,
@@ -1141,23 +1133,18 @@ def write_index_tables(
 
     Metadata (shard_size/k1/b/fields/stopwords — decode-critical, see
     index_meta) is a single-row JSON ``_meta`` table, so the whole index
-    lives in the catalog with no filesystem side-channel."""
+    lives in the catalog with no filesystem side-channel. Tables are
+    written through _write_tables (pinning and order as in write_index),
+    the ``_meta`` table last."""
     import json
 
-    def w(df, name):
+    def save(name: str, df: DataFrame) -> None:
         wr = df.write.mode(mode).format(storage_format)
-        if index.partitioned:
+        if index.partitioned and name != "stats":
             wr = wr.partitionBy("pk")
-        wr.saveAsTable(name)
+        wr.saveAsTable(f"{prefix}_{name}")
 
-    w(index.docs, f"{prefix}_docs")
-    w(index.terms, f"{prefix}_terms")
-    w(index.packed, f"{prefix}_postings")
-    if index.doclens is not None:
-        w(index.doclens, f"{prefix}_doclens")
-    index.stats.write.mode(mode).format(storage_format).saveAsTable(
-        f"{prefix}_stats"
-    )
+    _write_tables(index, save)
     meta = index_meta(index)
     meta["storage_format"] = storage_format
     index.spark.createDataFrame(

@@ -74,14 +74,21 @@ def checkpointed_build(
     the pk: manifests are written per pk after its batch's data committed,
     and a resumed run re-does only pks without a matching manifest
     (dynamic overwrite replaces exactly the pk directories being rewritten,
-    never completed ones).
+    never completed ones). Each batch's tables go through the index
+    writer's loop (indexer._write_tables), so a batch tokenizes its slice
+    of the corpus once.
 
     Returns summary metrics. Resume: re-invoking with the same inputs skips
     completed partitions (lineage fingerprint = build params; callers that
     need input-data fingerprints can add a snapshot id to build_kwargs —
     with Iceberg inputs this is the snapshot_id, giving exact lineage)."""
     from bm25_spark.operators.docids import assign_doc_ids
-    from bm25_spark.operators.indexer import build_index
+    from bm25_spark.operators.indexer import (
+        _write_meta,
+        _write_tables,
+        build_index,
+        index_meta,
+    )
 
     build_kwargs = dict(build_kwargs or {})
     fp = lineage_fingerprint(
@@ -116,13 +123,9 @@ def checkpointed_build(
         with_ids = assign_doc_ids(
             transcripts,
             order_cols=build_kwargs.pop("order_cols", ("conv_id", "turn_idx")),
-            method=build_kwargs.pop("docid_method", "sample"),
         )
         build_kwargs["id_col"] = "doc_id"
     build_kwargs.pop("order_cols", None)
-    build_kwargs.pop("docid_method", None)
-
-    from pyspark import StorageLevel
 
     spark = transcripts.sparkSession
     conf_key = "spark.sql.sources.partitionOverwriteMode"
@@ -136,22 +139,9 @@ def checkpointed_build(
                 F.col(partition_col).cast("string").isin(batch)
             )
             idx = build_index(part, partition_col=partition_col, **build_kwargs)
-            # pin the tokenize output (runs) and the packed postings so the
-            # 4-5 table writes below share ONE tokenize+pack computation
-            # instead of re-running the pipeline per table
-            pins = [df for df in (idx.enc, idx.packed) if df is not None]
-            for df_ in pins:
-                df_.persist(StorageLevel.MEMORY_AND_DISK)
-            tables = [
-                ("docs", idx.docs),
-                ("terms", idx.terms),
-                ("postings", idx.packed),
-                ("stats", idx.stats),
-            ]
-            if idx.doclens is not None:
-                tables.append(("doclens", idx.doclens))
             metrics_by_pk: dict[str, dict] = {k: {} for k in batch}
-            for tname, df in tables:
+
+            def save(tname: str, df: DataFrame) -> None:
                 base = os.path.join(root, tname)
                 # dynamic overwrite: ONE write job lands every pk=<value>
                 # directory of this batch, leaving completed pks untouched
@@ -176,11 +166,9 @@ def checkpointed_build(
                 got = {r["pk"]: r["count"] for r in counts}
                 for k in batch:
                     metrics_by_pk[k][f"{tname}_rows"] = int(got.get(k, 0))
-            from bm25_spark.operators.indexer import _write_meta, index_meta
 
+            _write_tables(idx, save)
             _write_meta(index_meta(idx), os.path.join(root, "meta.json"))
-            for df_ in pins:
-                df_.unpersist()
             elapsed = round(time.perf_counter() - t0, 3)
             for key in batch:
                 manifest = {

@@ -82,7 +82,11 @@ def stream_ingest(
     (segments/_offsets.json) updated per batch — O(1) driver work per
     micro-batch, never a scan over all existing segments. A re-run of the
     same batch_id (failure replay) reuses its recorded offset, so doc_ids
-    stay stable and the segment overwrite stays idempotent."""
+    stay stable and the segment overwrite stays idempotent.
+
+    ``build_segment_index=True`` also writes each micro-batch's packed
+    index (indexer.write_index, which tokenizes the batch once) under
+    ``segment_indexes/`` for compact_segments(incremental=True)."""
     checkpoint_dir = checkpoint_dir or os.path.join(root, "_checkpoint")
     _store_json(
         {
@@ -128,21 +132,7 @@ def stream_ingest(
                 shard_size=shard_size,
                 check_empty=False,
             )
-            # pin the tokenize output and packed postings so write_index's
-            # 4-5 independent table writes share ONE tokenize+pack
-            # computation (same reason checkpointed_build pins them) —
-            # without this every micro-batch re-runs the fused pipeline
-            # once per table
-            from pyspark import StorageLevel
-
-            pins = [d for d in (idx.enc, idx.packed) if d is not None]
-            for d in pins:
-                d.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                write_index(idx, _segment_index_path(root, batch_id))
-            finally:
-                for d in pins:
-                    d.unpersist()
+            write_index(idx, _segment_index_path(root, batch_id))
 
     stream = spark.readStream.schema(schema).parquet(input_path)
     writer = (
