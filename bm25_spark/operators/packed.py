@@ -40,10 +40,18 @@ Two physical strategies, chosen per query:
    fewer shard groups than the cluster has slots, the query side is split
    into a bounded number of buckets (blob replication = min(buckets,
    queries-that-use-the-term), chosen at plan time — never Q). Per-shard
-   top-k merges globally. Each task runs the kernel once per (query, shard)
-   and shares its block decodes across the bucket's queries. Metadata
-   filters become a doc-id mask INSIDE the kernel (reference semantics:
-   filtered docs skipped during traversal, bm25.dart:644).
+   top-k merges globally. Each (pk, shard, bucket) group gets its own
+   scoring partition (an explicit-count repartition that AQE cannot
+   coalesce: the blob shuffle is small, the Python scoring behind it is
+   not), runs the kernel once per (query, shard) and shares its block
+   decodes across the bucket's queries. Metadata filters become a doc-id
+   mask INSIDE the kernel (reference semantics: filtered docs skipped
+   during traversal, bm25.dart:644).
+
+Every term probe (dictionary, shard metadata, blob fetch, cluster scan) is
+one parsed ``term IN (...)`` predicate (``_in_list``): plan building costs
+the same few JVM calls whatever the number of query terms, and the
+predicate still pushes into the parquet scan.
 """
 
 from __future__ import annotations
@@ -53,7 +61,7 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -93,6 +101,24 @@ DRIVER_PATH_MAX_WORK = int(
 DRIVER_PATH_MAX_ALLOWED = int(
     os.environ.get("BM25_DRIVER_PATH_MAX_ALLOWED", "2000000")
 )
+
+
+def _sql_literal(v) -> str:
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return str(int(v))
+
+
+def _in_list(col: str, values) -> Column:
+    """``col IN (values)`` for the query-path probes, built as ONE parsed
+    expression: one JVM call, where ``Column.isin(list)`` creates one JVM
+    literal per value (~1 s of Py4J round trips for a 1000-term batch).
+    Strings become escaped SQL literals and ints integer literals; the
+    optimizer sees the same ``In`` (or ``InSet``) and pushes it into the
+    parquet scan as ``In(col, [...])``."""
+    if not values:
+        return F.lit(False)
+    return F.expr(f"`{col}` IN ({', '.join(map(_sql_literal, values))})")
 
 
 def _qrows(index: BM25Index, queries, stopwords):
@@ -173,7 +199,7 @@ def _term_meta(index: BM25Index, terms_needed, partition_keys):
         for t in missing:
             cache[t] = {}
         rows = (
-            index.terms.filter(F.col("term").isin(missing))
+            index.terms.filter(_in_list("term", missing))
             .select("pk", "term", "idf", "df")
             .collect()
         )
@@ -200,7 +226,7 @@ def _shard_meta(index: BM25Index, terms_needed, partition_keys):
         for t in missing:
             cache[t] = {}
         rows = (
-            index.packed.filter(F.col("term").isin(missing))
+            index.packed.filter(_in_list("term", missing))
             .select("pk", "term", "shard", "n", "block_max")
             .collect()
         )
@@ -250,13 +276,13 @@ def _fetch_raw_blobs(index: BM25Index, wanted: set[tuple[str, str, int]]) -> Non
         shards_m = sorted({s for _, _, s in missing})
         rows = (
             index.packed.filter(
-                F.col("term").isin(terms_m)
-                & F.col("pk").isin(pks_m)
+                _in_list("term", terms_m)
+                & _in_list("pk", pks_m)
                 # shard predicate: ub-ordered fetch waves (see _driver_topk)
                 # must not drag in every shard of a term the moment one
                 # shard of it is wanted — bytes collected track the WAND
                 # frontier, not the whole term
-                & F.col("shard").isin(shards_m)
+                & _in_list("shard", shards_m)
             )
             .select("pk", "term", "shard", *_BLOB_COLS)
             .collect()
@@ -625,15 +651,25 @@ def _cluster_scored(
     at the batch size, so a 1000-query batch over Zipf-hot terms on a big
     index (shards >= slots) ships every blob exactly once and scores all
     1000 queries in one pass per shard, sharing the varint block decodes
-    across queries."""
+    across queries.
+
+    Task shape: the joined blob rows are repartitioned by (pk, shard,
+    bucket) into n_groups x n_buckets partitions — one scoring partition
+    per group — and the groupBy reuses that partitioning (one Exchange).
+    The scorer is CPU-bound Python whose cost shuffle bytes do not
+    predict: left to size the exchange by bytes, AQE coalesces the
+    compressed blobs (a few hundred KB for a 400-query batch) into ONE
+    task that scores every (query, shard) pair serially. The explicit
+    count keeps one task per group (``indexer._merge_runs_exchange``
+    guards its merge the same way)."""
     shard_size = index.shard_size
     k1, b = index.k1, index.b
     spark = index.spark
 
     needed = sorted({t for _, t, _ in qrows})
-    p = index.packed.filter(F.col("term").isin(needed))
+    p = index.packed.filter(_in_list("term", needed))
     if partition_keys is not None:
-        p = p.filter(F.col("pk").isin(partition_keys))
+        p = p.filter(_in_list("pk", partition_keys))
 
     # Tiny driver-side query plan, shipped to executors in the UDF closure
     # (Spark broadcasts the serialized command): idf per (pk, term) from
@@ -692,10 +728,12 @@ def _cluster_scored(
 
     if stats is not None:
         # opt-in instrumentation (tests / telemetry): plan-time bucket
-        # facts are free; per-task input row counts cost one extra agg job
-        # over the joined blob rows. Replication per blob = number of
-        # buckets whose queries use its term — capped by n_buckets AND by
-        # the number of queries containing the term.
+        # facts are free; per-(pk, shard, qb) group input row counts cost
+        # one extra agg job over the joined blob rows (groups, not Spark
+        # tasks: hash partitioning may put two groups in one task).
+        # Replication per blob = number of buckets whose queries use its
+        # term — capped by n_buckets AND by the number of queries
+        # containing the term.
         repl: dict[str, int] = {}
         for term, _qb in term_bucket_rows:
             repl[term] = repl.get(term, 0) + 1
@@ -703,16 +741,16 @@ def _cluster_scored(
         stats["n_buckets"] = n_buckets
         stats["n_queries"] = len(qids)
         stats["max_term_replication"] = max(repl.values(), default=0)
-        per_task = (
+        per_group = (
             rows.groupBy("pk", "shard", "qb")
             .agg(F.count(F.lit(1)).alias("c"))
             .collect()
         )
-        stats["n_tasks"] = len(per_task)
+        stats["n_score_groups"] = len(per_group)
         stats["max_task_rows"] = max(
-            (int(r["c"]) for r in per_task), default=0
+            (int(r["c"]) for r in per_group), default=0
         )
-        stats["total_joined_rows"] = sum(int(r["c"]) for r in per_task)
+        stats["total_joined_rows"] = sum(int(r["c"]) for r in per_group)
 
     has_filter = allowed is not None
     if has_filter:
@@ -720,7 +758,7 @@ def _cluster_scored(
         # (pk, shard): shard_size/8 bytes regardless of selectivity (128 KB
         # at the default 1M shard), instead of a collect_list array that
         # bloats to 8 MB/row for low-selectivity filters
-        def to_bitmap(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def to_bitmap(key, pdf):
             pk_, shard_ = key[0], int(key[1])
             slots = (
                 pdf["doc_id"].to_numpy(np.int64) - shard_ * shard_size
@@ -751,7 +789,7 @@ def _cluster_scored(
             {"query_id": [], "pk": [], "doc_id": [], "score": []}
         ).astype({"query_id": np.int64, "doc_id": np.int64, "score": np.float64})
 
-    def score_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def score_group(key, pdf):
         """Score every query of this bucket against one shard's blobs: one
         ``score_shard`` call per query, each starting from an empty top-k
         (theta is local to the task). Block decodes are cached PER TERM
@@ -815,8 +853,10 @@ def _cluster_scored(
             return _empty_scored()
         return pd.concat(frames, ignore_index=True)
 
-    return rows.groupBy("pk", "shard", "qb").applyInPandas(
-        score_group, schema=_SCORED_SCHEMA
+    return (
+        rows.repartition(n_groups * n_buckets, "pk", "shard", "qb")
+        .groupBy("pk", "shard", "qb")
+        .applyInPandas(score_group, schema=_SCORED_SCHEMA)
     )
 
 
@@ -837,7 +877,7 @@ def search_packed(
     path or the cluster path automatically; ``prune=False`` turns off the
     shard- and block-level pruning on the driver path (reference mode).
     ``cluster_stats``: pass a dict to capture the cluster path's shuffle
-    shape (bucket counts, per-task input rows — one extra agg job)."""
+    shape (bucket counts, per-group input rows — one extra agg job)."""
     if limit < 1:
         raise ValueError("limit must be >= 1")
     spark = index.spark

@@ -2,6 +2,8 @@
 must be rank- and score-identical to the oracle on both the driver and the
 cluster path, and the two paths bit-identical to each other."""
 
+import re
+
 import numpy as np
 import pytest
 
@@ -404,6 +406,29 @@ def test_packed_batch_and_empty(packed_synth):
     assert search_packed(packed_synth, [(0, "  ")], limit=5).count() == 0
 
 
+def test_in_list_matches_isin(spark, tmp_path):
+    """The one-call probe predicate selects exactly what Column.isin does
+    for strings that need escaping, ints and the empty list, and still
+    pushes into the parquet scan."""
+    from pyspark.sql import functions as F
+
+    from bm25_spark.operators.packed import _in_list
+
+    vals = ["it's", "a\\b", "back\\", "\\'", "q''q", "\\u0041", "x\ny", "ünï"]
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(v, i) for i, v in enumerate(vals + ["other", "A", "plain"])],
+        "term string, shard int",
+    ).write.parquet(path)
+    t = spark.read.parquet(path)
+    for col, want in (("term", vals), ("shard", [0, 3, 9]), ("term", [])):
+        got = t.filter(_in_list(col, want)).collect()
+        assert sorted(got) == sorted(t.filter(F.col(col).isin(want)).collect())
+    probe = t.filter(_in_list("term", vals))
+    plan = probe._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PushedFilters: \[.*In\(term, ", plan), plan
+
+
 def test_dispatch_bounds_per_query_work(packed_synth, monkeypatch):
     """Driver-path dispatch must bound PER-QUERY scoring work (Q x df),
     not just the shared fetch volume: a large-Q batch of hot terms would
@@ -429,7 +454,7 @@ def test_dispatch_bounds_per_query_work(packed_synth, monkeypatch):
     got_cluster = {
         (r["query_id"], r["rank"], r["doc_id"]) for r in routed.collect()
     }
-    assert stats.get("n_tasks", 0) >= 1  # cluster path ran
+    assert stats.get("n_score_groups", 0) >= 1  # cluster path ran
     assert got_cluster == got_driver
 
     # a single query under the same tiny work bound also goes cluster,
@@ -440,19 +465,22 @@ def test_dispatch_bounds_per_query_work(packed_synth, monkeypatch):
         packed_synth, [(0, "spark stream data")], limit=5,
         cluster_stats=stats,
     )
-    assert stats.get("n_tasks", 0) >= 1
+    assert stats.get("n_score_groups", 0) >= 1
     assert {
         (r["query_id"], r["rank"], r["doc_id"]) for r in one.collect()
     } == {x for x in got_driver if x[0] == 0}
 
 
-def test_cluster_batch_skew_rows_bounded(spark):
+def test_cluster_batch_skew_rows_bounded(spark, tmp_path):
     """Zipf-hot term + filter across >=4 shards x >=2 query buckets: the
     bucket fan-out's replication cap (packed._cluster_scored) must hold in
     the PHYSICAL joined rows, not just the docstring — each blob row is
     shipped at most min(n_buckets, queries-using-its-term) times, and one
-    task never receives more blob rows than the batch's distinct terms
-    (i.e. per-task input is O(terms), independent of Q and N)."""
+    group never receives more blob rows than the batch's distinct terms
+    (i.e. per-group input is O(terms), independent of Q and N). The
+    scorer must also run as more than one Spark task (AQE must not
+    coalesce the small blob shuffle into one serial Python task) behind a
+    single Exchange, with the term probe pushed into the parquet scan."""
     import datetime as dt
 
     t0 = dt.datetime(2026, 1, 1)
@@ -480,7 +508,7 @@ def test_cluster_batch_skew_rows_bounded(spark):
     got = {(r["query_id"], r["doc_id"]) for r in res.collect()}
 
     assert stats["n_buckets"] >= 2
-    assert stats["n_tasks"] >= 4 * 2  # shards x buckets actually used
+    assert stats["n_score_groups"] >= 4 * 2  # shards x buckets used
     # hot blob ships once per BUCKET, never once per query
     assert stats["max_term_replication"] <= stats["n_buckets"]
     assert stats["max_term_replication"] < len(queries)
@@ -494,4 +522,24 @@ def test_cluster_batch_skew_rows_bounded(spark):
     drv = search_packed(idx, queries, limit=5, flt={"role": ["user"]})
     want = {(r["query_id"], r["doc_id"]) for r in drv.collect()}
     assert got == want
+
+    # physical task shape on the persisted index (the parquet scan is
+    # where the term predicate must push down)
+    from pyspark.sql import functions as F
+
+    from bm25_spark.operators import packed as packed_mod
+    from bm25_spark.operators.indexer import read_index, write_index
+
+    write_index(idx, str(tmp_path / "idx"))
+    loaded = read_index(spark, str(tmp_path / "idx"))
+    scored = packed_mod._cluster_scored(
+        loaded, packed_mod._qrows(loaded, queries, None), None, None, 5
+    ).withColumn("part", F.spark_partition_id())
+    parts = {r["part"] for r in scored.collect()}
+    assert len(parts) > 1, "the scorer ran as one task"
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]  # the final adaptive plan
+    below = plan[plan.index("FlatMapGroupsInPandas"):]
+    assert len(re.findall(r"(?<!Broadcast)Exchange ", below)) == 1, plan
+    assert re.search(r"PushedFilters: \[.*In\(term, ", plan), plan
     idx.packed.unpersist()

@@ -94,9 +94,14 @@ def main() -> int:
             "Cluster batch scorer",
             "The WHOLE query batch scores per (pk, shard) group: packed "
             "blobs cross the shuffle once per plan-time bucket (bounded by "
-            "parallelism), never once per query. Look for: the blob-side "
-            "exchange keyed by (pk, shard[, bucket]); the query frame "
-            "entering via broadcast/local relation, not a shuffle.",
+            "parallelism), never once per query, into one scoring "
+            "partition per (pk, shard, bucket) group. Look for: exactly "
+            "one blob-side Exchange hashpartitioning(pk, shard, qb, "
+            "n_groups x n_buckets) marked REPARTITION_BY_NUM (an explicit "
+            "count AQE does not coalesce) directly under the "
+            "FlatMapGroupsInPandas scorer; PushedFilters with "
+            "In(term, ...); the query frame entering via broadcast/local "
+            "relation, not a shuffle.",
             captured_explain(res),
         )
     )
