@@ -87,18 +87,6 @@ def doc_tokens(
     return tokenize_text(text, stopwords)
 
 
-def doc_term_counts(
-    text: str | None,
-    stopwords: frozenset[str] | None = None,
-    stopwords_b: frozenset[bytes] | None = None,
-):
-    """(Counter, dl) for one document — see doc_tokens for key semantics."""
-    from collections import Counter
-
-    toks = doc_tokens(text, stopwords, stopwords_b)
-    return Counter(toks), len(toks)
-
-
 def make_tokenize_udf(stopwords=None):
     """Returns a pandas UDF Column-function: text -> array<string> terms."""
     stop = frozenset(stopwords) if stopwords else None

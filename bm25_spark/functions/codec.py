@@ -78,37 +78,24 @@ def encode_varints(
     return (buf, nbytes) if return_lengths else buf
 
 
-def decode_varints(buf: bytes) -> np.ndarray:
-    """Decode a LEB128 stream to uint64 array, vectorized."""
-    if not buf:
-        return np.empty(0, dtype=np.uint64)
+def decode_varints(buf, count: int | None = None) -> np.ndarray:
+    """Decode a LEB128 stream (bytes or a uint8 array) to a uint64 array,
+    vectorized. Raises ValueError when the stream ends inside a value or,
+    given ``count``, when it does not hold exactly ``count`` values — a
+    truncated or bit-flipped blob fails loudly instead of scoring garbage."""
     raw = np.frombuffer(buf, dtype=np.uint8)
-    cont = (raw & 0x80) != 0
-    # value boundaries: positions where cont is False end a value
-    ends = np.nonzero(~cont)[0]
-    starts = np.empty_like(ends)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    payload = (raw & 0x7F).astype(np.uint64)
+    ends = np.flatnonzero(raw < 0x80)  # bytes without a continuation bit
+    if len(raw) and (len(ends) == 0 or ends[-1] != len(raw) - 1):
+        raise ValueError("corrupt postings blob: ends inside a varint")
+    starts = np.concatenate(([0], ends[:-1] + 1))[: len(ends)]
     # shift = 7 * (position within the value)
-    idx = np.arange(len(raw), dtype=np.int64)
-    value_id = np.cumsum(np.concatenate(([False], ~cont[:-1]))).astype(np.int64)
-    within = idx - starts[value_id]
-    shifted = payload << (np.uint64(7) * within.astype(np.uint64))
-    out = np.zeros(len(ends), dtype=np.uint64)
-    np.add.at(out, value_id, shifted)
-    return out
-
-
-def _bit_length(v: np.ndarray) -> np.ndarray:
-    out = np.zeros(len(v), dtype=np.int64)
-    x = v.astype(np.uint64).copy()
-    for shift in (32, 16, 8, 4, 2, 1):
-        s = np.uint64(shift)
-        mask = x >= (np.uint64(1) << s)
-        out[mask] += shift
-        x[mask] >>= s
-    out[v.astype(np.uint64) != 0] += 1
+    within = np.arange(len(raw)) - np.repeat(starts, ends - starts + 1)
+    shifted = (raw & 0x7F).astype(np.uint64) << (
+        np.uint64(7) * within.astype(np.uint64)
+    )
+    out = np.add.reduceat(shifted, starts) if len(ends) else shifted
+    if count is not None and len(out) != count:
+        raise ValueError(f"corrupt postings blob: {len(out)} != {count}")
     return out
 
 
@@ -127,7 +114,8 @@ def pack_postings(
     ``block_off[i]`` is the byte offset of block i's first varint triple.
     The delta chain runs straight through block boundaries, so a block can
     be decoded standalone: its first delta is relative to
-    ``block_last[i-1]`` (``shard_base`` for block 0) — see unpack_blocks.
+    ``block_last[i-1]`` (``shard_base`` for block 0) — see
+    unpack_blocks_bulk.
     """
     n = len(doc_ids)
     doc_ids = doc_ids.astype(np.int64)
@@ -156,13 +144,56 @@ def unpack_postings(
     data: bytes, n: int, shard_base: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Returns (doc_ids, tfs, dls) — inverse of pack_postings."""
-    vals = decode_varints(data)
-    assert len(vals) == 3 * n, (len(vals), n)
+    vals = decode_varints(data, 3 * n)
     deltas = vals[0::3].astype(np.int64)
     tfs = vals[1::3].astype(np.int32)
     dls = vals[2::3].astype(np.int32)
     doc_ids = np.cumsum(deltas) + shard_base
     return doc_ids, tfs, dls
+
+
+def unpack_blocks_bulk(
+    blobs, sels
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Decode the selected blocks of MANY blobs with ONE decode_varints
+    call over their concatenated byte ranges (ruled-out blocks are never
+    decoded). ``blobs``: per blob (data, n, shard_base, block_last,
+    block_off); ``sels``: per blob its sorted unique block ids. Returns
+    (doc_ids, tfs, dls, counts): each blob's selected postings in doc
+    order, blob after blob, and the postings count per blob. A block's
+    first delta is relative to the previous block's last doc id
+    (``shard_base`` for block 0), so one segmented cumsum restores ids."""
+    nblk = np.array([len(blob[4]) for blob in blobs], dtype=np.int64)
+    first = np.cumsum(nblk) - nblk  # global id of each blob's block 0
+    g = np.concatenate(
+        [np.empty(0, np.int64)]
+        + [np.asarray(s_, np.int64) + f for s_, f in zip(sels, first)]
+    )
+    if len(g) == 0:
+        z = np.empty(0, np.int64)
+        return z, z.astype(np.int32), z.astype(np.int32), nblk * 0
+    owner = np.repeat(np.arange(len(blobs)), nblk)  # blob of each block
+    local = np.arange(len(owner)) - first[owner]  # block id inside it
+    off = np.concatenate([[0]] + [blob[4] for blob in blobs])[1:]
+    end = np.append(off[1:], 0)
+    end[first + nblk - 1] = [len(blob[0]) for blob in blobs]
+    base = np.concatenate([[0]] + [blob[3] for blob in blobs])[:-1]
+    base[first] = [blob[2] for blob in blobs]
+    n = np.array([blob[1] for blob in blobs], dtype=np.int64)[owner]
+    npost = (np.minimum((local + 1) * BLOCK, n) - local * BLOCK)[g]
+    # one byte range per run of consecutive selected blocks of one blob
+    cut = np.flatnonzero((np.diff(g) != 1) | (np.diff(owner[g]) != 0)) + 1
+    r0, r1 = g[np.append(0, cut)[: len(g)]], g[np.append(cut - 1, len(g) - 1)]
+    runs = zip(owner[r0].tolist(), off[r0].tolist(), end[r1].tolist())
+    buf = b"".join([blobs[i][0][lo:hi] for i, lo, hi in runs])
+    vals = decode_varints(buf, 3 * int(npost.sum()))
+    deltas = vals[0::3].astype(np.int64)
+    csum = np.cumsum(deltas)
+    head = np.cumsum(npost) - npost  # first posting of each selected block
+    doc_ids = csum + np.repeat(base[g] - (csum[head] - deltas[head]), npost)
+    counts = np.bincount(owner[g], weights=npost, minlength=len(blobs))
+    tfs, dls = vals[1::3].astype(np.int32), vals[2::3].astype(np.int32)
+    return doc_ids, tfs, dls, counts.astype(np.int64)
 
 
 def unpack_blocks(
@@ -173,35 +204,11 @@ def unpack_blocks(
     block_off: np.ndarray,
     sel: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode ONLY the selected blocks (sorted unique block indices) of a
-    packed posting blob — the physical read behind block-max WAND: ruled-out
-    blocks are never varint-decoded. Contiguous selected blocks decode as
-    one run. Returns (doc_ids, tfs, dls) concatenated in doc order."""
-    nb = len(block_last)
-    if len(sel) == 0:
-        z = np.empty(0, np.int64)
-        return z, z.astype(np.int32), z.astype(np.int32)
-    # split sel into runs of consecutive block indices
-    cuts = np.flatnonzero(np.diff(sel) != 1) + 1
-    runs = np.split(sel, cuts)
-    ids_l, tfs_l, dls_l = [], [], []
-    for run in runs:
-        b0, b1 = int(run[0]), int(run[-1])
-        lo = int(block_off[b0])
-        hi = int(block_off[b1 + 1]) if b1 + 1 < nb else len(data)
-        vals = decode_varints(data[lo:hi])
-        n_post = (min((b1 + 1) * BLOCK, n)) - b0 * BLOCK
-        assert len(vals) == 3 * n_post, (len(vals), n_post)
-        deltas = vals[0::3].astype(np.int64)
-        base = int(block_last[b0 - 1]) if b0 > 0 else shard_base
-        ids_l.append(np.cumsum(deltas) + base)
-        tfs_l.append(vals[1::3].astype(np.int32))
-        dls_l.append(vals[2::3].astype(np.int32))
-    return (
-        np.concatenate(ids_l),
-        np.concatenate(tfs_l),
-        np.concatenate(dls_l),
-    )
+    """(doc_ids, tfs, dls) of the selected blocks (sorted unique block
+    ids) of one packed posting blob: unpack_blocks_bulk over one blob."""
+    return unpack_blocks_bulk(
+        [(data, n, shard_base, block_last, block_off)], [sel]
+    )[:3]
 
 
 def pack_run(

@@ -109,38 +109,30 @@ def _relevant_term_counts_warm(
 
     Cost: postings are doc-sorted and block-indexed, so only the blocks
     whose doc-id range covers a requested id are decoded — O(vocab ×
-    |relevant ids|) block probes against RAM-resident blobs, each decode
-    cached for later queries. The reconstructed counts are exactly the
-    reference's ``doc.terms`` multiset (the index stores post-stopword
-    analyzer tokens), so the expansion is identical to re-tokenizing the
-    stored text."""
+    |relevant ids|) block probes against RAM-resident blobs, then one
+    bulk decode of every covering block. The reconstructed counts are
+    exactly the reference's ``doc.terms`` multiset (the index stores
+    post-stopword analyzer tokens), so the expansion is identical to
+    re-tokenizing the stored text."""
     d = index.__dict__
     if not (d.get("_blobs_complete") and d.get("_dict_complete")):
         return None
     import numpy as np
 
-    from bm25_spark.operators import packed as packed_mod
+    from bm25_spark.functions import codec
 
-    wanted = sorted({int(i) for i in doc_ids})
+    wanted = np.unique(np.asarray(doc_ids, dtype=np.int64))
     ssz = index.shard_size
-    by_shard: dict[int, "np.ndarray"] = {}
-    for i in wanted:
-        by_shard.setdefault(i // ssz, []).append(i)
-    # one int64 array per shard, hoisted out of the per-term loop
-    by_shard = {
-        s: np.asarray(ids_, dtype=np.int64) for s, ids_ in by_shard.items()
-    }
+    by_shard = {s: wanted[wanted // ssz == s] for s in set(wanted // ssz)}
     rcache = d.get("_raw_blob_cache", {})
-    tfm: dict[int, dict[str, int]] = {}
-    dls: dict[int, int] = {}
+    blobs, sels, blob_terms = [], [], []
     for term, by_pk in d.get("_shard_meta_cache", {}).items():
         for pk, shards in by_pk.items():
             for shard, _n, _mb in shards:
                 w_arr = by_shard.get(shard)
                 if w_arr is None:
                     continue
-                key = (pk, term, shard)
-                raw = rcache.get(key)
+                raw = rcache.get((pk, term, shard))
                 if raw is None:  # cache mutated under us — play it safe
                     return None
                 bl = raw[2]  # last doc_id per block
@@ -148,16 +140,24 @@ def _relevant_term_counts_warm(
                 need = need[need < len(bl)]
                 if len(need) == 0:
                     continue
-                ids, tfs, dlsa = packed_mod._driver_blocks(
-                    index, key, raw, need
-                )
-                mask = np.isin(ids, w_arr)
-                for did, tf, dl in zip(ids[mask], tfs[mask], dlsa[mask]):
-                    tfm.setdefault(int(did), {})[term] = int(tf)
-                    dls[int(did)] = int(dl)
-    if set(tfm) != set(wanted):
+                blobs.append((raw[1], raw[0], shard * ssz, bl, raw[4]))
+                sels.append(need)
+                blob_terms.append(term)
+    # one bulk decode of every block that covers a requested id
+    ids, tfs, dlsa, counts = codec.unpack_blocks_bulk(blobs, sels)
+    terms = np.repeat(np.arange(len(blob_terms)), counts)
+    hit = np.isin(ids, wanted)
+    tfm: dict[int, dict[str, int]] = {}
+    dls: dict[int, int] = {}
+    for did, ti, tf, dl in zip(
+        ids[hit].tolist(), terms[hit].tolist(), tfs[hit].tolist(),
+        dlsa[hit].tolist(),
+    ):
+        tfm.setdefault(did, {})[blob_terms[ti]] = tf
+        dls[did] = dl
+    if set(tfm) != set(wanted.tolist()):
         return None
-    return [(tfm[i], dls[i]) for i in wanted]
+    return [(tfm[i], dls[i]) for i in wanted.tolist()]
 
 
 def search_with_feedback(

@@ -849,8 +849,7 @@ def doclens_view(runs: DataFrame) -> DataFrame:
                 cols["n"].to_pylist(),
                 cols["data"].to_pylist(),
             ):
-                vals = codec.decode_varints(bytes(data))
-                assert len(vals) == 2 * n
+                vals = codec.decode_varints(bytes(data), 2 * n)
                 ids = np.cumsum(vals[0::2].astype(np.int64))
                 dls = vals[1::2].astype(np.int32)
                 yield pa.RecordBatch.from_arrays(

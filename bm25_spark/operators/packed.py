@@ -11,15 +11,13 @@ lib/src/bm25.dart:437-468, re-thought for a 1000-executor cluster):
   contiguous doc_id ranges), so per-(query, pk, shard) scoring is complete
   and a per-shard top-k merges into an EXACT global top-k — the distributed
   analog of the reference's single-threaded bounded heap (bm25.dart:744-790);
-- scoring is pure numpy over Arrow batches: varint-decode, dense
-  accumulate (np.bincount over shard-local doc slots), partition top-k. No
-  per-row Python, no JVM<->Python chatter beyond the ≤|q| blobs/shard.
-
-One scoring kernel, ``score_shard``, serves both strategies below: it
-scores one query against one shard's weighted term blobs by segment-ordered
-block-max WAND with chunked theta updates, decoding only the blocks it
-cannot rule out through one per-block cache over ``codec.unpack_blocks``
-(``_decode_blocks``). The strategies differ only in what they feed it.
+- scoring is pure numpy over Arrow batches in ONE kernel, ``score_shard``,
+  that both strategies below feed: per query batch and shard, each block
+  varint-decoded once in bulk, one np.bincount per query chunk over
+  (query, doc) cells (dense or sorted-sparse, by the measured work), a
+  vectorized top-k (or block-max WAND for a single query over long
+  lists). No per-row
+  Python, no JVM<->Python chatter beyond the ≤|q| blobs/shard.
 
 Two physical strategies, chosen per query:
 
@@ -43,10 +41,10 @@ Two physical strategies, chosen per query:
    top-k merges globally. Each (pk, shard, bucket) group gets its own
    scoring partition (an explicit-count repartition that AQE cannot
    coalesce: the blob shuffle is small, the Python scoring behind it is
-   not), runs the kernel once per (query, shard) and shares its block
-   decodes across the bucket's queries. Metadata filters become a doc-id
-   mask INSIDE the kernel (reference semantics: filtered docs skipped
-   during traversal, bm25.dart:644).
+   not) and makes ONE kernel call for all the bucket's queries: each
+   block decoded once, shared by every query using its term. Metadata
+   filters become a doc-id mask INSIDE the kernel (reference semantics:
+   filtered docs skipped during traversal, bm25.dart:644).
 
 Every term probe (dictionary, shard metadata, blob fetch, cluster scan) is
 one parsed ``term IN (...)`` predicate (``_in_list``): plan building costs
@@ -153,7 +151,7 @@ def warm_query_caches(
         return False
     tcache: dict = {}
     for r in index.terms.select("pk", "term", "idf", "df").collect():
-        tcache.setdefault(r["term"], {})[r["pk"]] = (float(r["idf"]), int(r["df"]))
+        _add_term_meta(tcache.setdefault(r["term"], {}), r)
 
     do_blobs = False
     if preload_blobs:
@@ -167,9 +165,7 @@ def warm_query_caches(
     scache: dict = {}
     rcache: dict = {}
     for r in index.packed.select(*cols).collect():
-        scache.setdefault(r["term"], {}).setdefault(r["pk"], []).append(
-            (int(r["shard"]), int(r["n"]), float(max(r["block_max"])))
-        )
+        _add_shard_meta(scache.setdefault(r["term"], {}), r)
         if do_blobs:
             key = (r["pk"], r["term"], int(r["shard"]))
             rcache[key] = _raw_blob(*(r[c] for c in _BLOB_COLS))
@@ -185,61 +181,54 @@ def warm_query_caches(
     return True
 
 
+def _add_term_meta(by_pk: dict, r) -> None:
+    by_pk[r["pk"]] = (float(r["idf"]), int(r["df"]))
+
+
+def _add_shard_meta(by_pk: dict, r) -> None:
+    by_pk.setdefault(r["pk"], []).append(
+        (int(r["shard"]), int(r["n"]), float(max(r["block_max"])))
+    )
+
+
+def _probed(index, attr, table, cols, add, terms_needed, partition_keys):
+    """{(pk, term): value} for ``terms_needed`` within ``partition_keys``,
+    from the term -> {pk: value} cache ``index.<attr>``; the terms it
+    lacks are probed with ONE ``term IN (...)`` scan of ``table`` (none
+    once the dictionary is complete), each row filed by ``add``."""
+    cache = index.__dict__.setdefault(attr, {})
+    missing = [t for t in terms_needed if t not in cache]
+    for t in missing:
+        cache[t] = {}
+    if missing and not index.__dict__.get("_dict_complete"):
+        rows = table.filter(_in_list("term", missing)).select("pk", "term", *cols)
+        for r in rows.collect():
+            add(cache[r["term"]], r)
+    return {
+        (pk, t): v
+        for t in terms_needed
+        for pk, v in cache[t].items()
+        if partition_keys is None or pk in partition_keys
+    }
+
+
 def _term_meta(index: BM25Index, terms_needed, partition_keys):
     """(pk, term) -> (idf, df) via the term dictionary, cached on the index
     (the driver-side analog of the reference's dictionary probe,
     bm25.dart:637)."""
-    cache = index.__dict__.setdefault("_term_meta_cache", {})
-    missing = [t for t in terms_needed if t not in cache]
-    if missing and index.__dict__.get("_dict_complete"):
-        for t in missing:
-            cache[t] = {}
-        missing = []
-    if missing:
-        for t in missing:
-            cache[t] = {}
-        rows = (
-            index.terms.filter(_in_list("term", missing))
-            .select("pk", "term", "idf", "df")
-            .collect()
-        )
-        for r in rows:
-            cache[r["term"]][r["pk"]] = (float(r["idf"]), int(r["df"]))
-    out = {}
-    for t in terms_needed:
-        for pk, meta in cache[t].items():
-            if partition_keys is None or pk in partition_keys:
-                out[(pk, t)] = meta
-    return out
+    return _probed(
+        index, "_term_meta_cache", index.terms, ("idf", "df"),
+        _add_term_meta, terms_needed, partition_keys,
+    )
 
 
 def _shard_meta(index: BM25Index, terms_needed, partition_keys):
     """(pk, term) -> list of (shard, n, ub_partial) where ub_partial =
     max block_max over the shard. Cached; blobs are NOT fetched here."""
-    cache = index.__dict__.setdefault("_shard_meta_cache", {})
-    missing = [t for t in terms_needed if t not in cache]
-    if missing and index.__dict__.get("_dict_complete"):
-        for t in missing:
-            cache[t] = {}
-        missing = []
-    if missing:
-        for t in missing:
-            cache[t] = {}
-        rows = (
-            index.packed.filter(_in_list("term", missing))
-            .select("pk", "term", "shard", "n", "block_max")
-            .collect()
-        )
-        for r in rows:
-            cache[r["term"]].setdefault(r["pk"], []).append(
-                (int(r["shard"]), int(r["n"]), float(max(r["block_max"])))
-            )
-    out = {}
-    for t in terms_needed:
-        for pk, lst in cache[t].items():
-            if partition_keys is None or pk in partition_keys:
-                out[(pk, t)] = lst
-    return out
+    return _probed(
+        index, "_shard_meta_cache", index.packed, ("shard", "n", "block_max"),
+        _add_shard_meta, terms_needed, partition_keys,
+    )
 
 
 _BLOB_COLS = ("n", "data", "block_last", "block_max", "block_off")
@@ -261,14 +250,13 @@ def _fetch_raw_blobs(index: BM25Index, wanted: set[tuple[str, str, int]]) -> Non
     """Fetch packed blobs (raw bytes) for the given (pk, term, shard) keys
     into the driver cache — ONE Spark collect for all of them (the scan is
     pruned by the term IN (...) predicate: parquet min-max + dictionary).
-    Decoding happens lazily per block in ``score_shard`` so block-max
-    pruning skips the decode cost of blocks it rules out."""
+    Decoding happens in ``score_shard``, so block-max pruning skips the
+    decode cost of blocks it rules out."""
     cache = index.__dict__.setdefault("_raw_blob_cache", {})
     if not index.__dict__.get("_blobs_complete") and len(cache) > 65536:
         # bound driver memory for lazily-fetched blobs; refetch is cheap.
         # A complete preload (warm_query_caches) is size-gated instead.
         cache.clear()
-        index.__dict__.get("_block_cache", {}).clear()
     missing = [k for k in wanted if k not in cache]
     if missing:
         terms_m = sorted({t for _, t, _ in missing})
@@ -292,155 +280,212 @@ def _fetch_raw_blobs(index: BM25Index, wanted: set[tuple[str, str, int]]) -> Non
             cache[key] = _raw_blob(*(r[c] for c in _BLOB_COLS))
 
 
-def _decode_blocks(cache: dict, key, raw: tuple, shard_base: int, need):
-    """(ids, tfs, dls) of the sorted block ids ``need`` of one blob, through
-    ``cache`` — {(key, block id): arrays}. A block reached through
-    different ``need`` shapes (other queries, other segment chunks) decodes
-    exactly once. The driver keeps one such cache per index (see
-    ``_driver_blocks``), a cluster task one per (pk, shard) group."""
-    n, data, bl, _bm, off = raw
-    nl = need.tolist()
-    new = [b_ for b_ in nl if (key, b_) not in cache]
-    if new:
-        ids, tfs, dls = codec.unpack_blocks(
-            data, n, shard_base, bl, off, np.asarray(new, np.int64)
-        )
-        o = 0
-        for b_ in new:
-            s_ = min((b_ + 1) * codec.BLOCK, n) - b_ * codec.BLOCK
-            cache[(key, b_)] = (
-                ids[o : o + s_], tfs[o : o + s_], dls[o : o + s_]
-            )
-            o += s_
-    if len(nl) == 1:
-        return cache[(key, nl[0])]
-    parts = [cache[(key, b_)] for b_ in nl]
-    return tuple(np.concatenate(col) for col in zip(*parts))
-
-
-def _driver_blocks(index: BM25Index, key: tuple[str, str, int], raw, need):
-    """``_decode_blocks`` over the index's driver-side block cache."""
-    cache = index.__dict__.setdefault("_block_cache", {})
-    if len(cache) > 65536:  # bound driver memory; re-decode is cheap
-        cache.clear()
-    return _decode_blocks(cache, key, raw, key[2] * index.shard_size, need)
-
-
 def _in_sorted(allow: np.ndarray, ids: np.ndarray) -> np.ndarray:
     """Membership of ``ids`` in the sorted array ``allow``."""
     pos = np.searchsorted(allow, ids).clip(max=len(allow) - 1)
     return allow[pos] == ids
 
 
-# segments scored between two theta updates in score_shard
+# segments scored between two theta updates in score_shard's pruned mode
 _SEG_CHUNK = 64
+# memory of one step of score_shard's batch mode: a query chunk (its
+# accumulator, the accumulator's partition copy, _PAIR_WORDS 8-byte
+# temporaries per (query, posting) pair: cell keys, weights, sorts) or a
+# slice of the batch's block decode (~160 transient bytes per posting)
+_CHUNK_BYTES = 32 << 20
+_PAIR_WORDS = 16
+# dense (query x span) accumulator iff its cells <= _DENSE_RATIO x pairs,
+# else sorted sparse cells: 8 picked the faster of the two at every shard
+# span and query mix tools/kernel_span.py was run on (BENCH_NOTES.md)
+_DENSE_RATIO = 8
+
+
+def _rank_cut(slot, ids, scores, k):
+    """Rows ordered by (slot, score desc, doc_id asc), at most k per slot:
+    the exact top-k with the global tie-break, so an equal-scored doc at the
+    k boundary is never dropped by an order-agnostic partition."""
+    order = np.lexsort((ids, -scores, slot))
+    slot, ids, scores = slot[order], ids[order], scores[order]
+    keep = np.arange(len(slot)) - np.searchsorted(slot, slot) < k
+    return slot[keep], ids[keep], scores[keep]
 
 
 def score_shard(
-    terms: list[tuple],
+    queries: list[list[tuple]],
+    blobs,
     shard_base: int,
     avgdl: float,
     k1: float,
     b: float,
     k: int,
-    top_buf: np.ndarray,
-    decode,
     mask=None,
+    top_buf: np.ndarray | None = None,
     prune: bool = True,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Exact BM25 scores of one query over one shard with block-max WAND —
-    the one scoring kernel of the driver and the cluster path.
+    """Exact BM25 top-``k`` of a batch of queries over one shard — the one
+    scoring kernel of the driver and the cluster path.
 
-    ``terms``: (w = qtf*idf, key, raw) per query term present in the
-    shard, in query-term order; raw = (n, data, block_last, block_max,
-    block_off). ``top_buf``: the caller's running top-``k`` scores (theta
-    is its min once it holds k) — the driver carries it across a query's
-    shards, a cluster task starts each (query, shard) empty.
-    ``decode(key, raw, need)``: (ids, tfs, dls) of the sorted block ids
-    ``need``. ``mask(ids)``: bool keep-mask of filter-allowed docs (None =
-    all). ``prune=False`` scores every posting (the reference mode).
+    ``queries``: per query, its (w = qtf*idf, key) terms present in the
+    shard, in query-term order; ``blobs[key]``: raw blob (n, data,
+    block_last, block_max, block_off). ``mask(ids)``: bool keep-mask of
+    filter-allowed docs (None = all; skipping them during traversal,
+    bm25.dart:644, leaves the upper bounds valid). ``top_buf``: a single
+    query's running top-k scores (the driver carries it across shards).
+    Returns (slot, doc_ids, scores): each query's top-k in this shard,
+    ordered by (slot, score desc, doc_id asc).
 
-    The union of the terms' block_last boundaries partitions the shard's
-    doc-id space into segments, each covered by exactly one block per
-    term. Segments are scored in upper-bound order, _SEG_CHUNK at a time;
-    once top_buf is full, a segment whose summed block maxima cannot reach
-    theta is skipped, and a block ALL of whose segments are skipped is
-    never varint-decoded. The order is ub-descending, so the first dead
-    chunk ends the shard. Safe: block maxima are TRUE upper bounds in the
-    same float association as the scores below, pruning is strict
-    ('< theta'), and every kept doc has all of its blocks decoded — kept
-    scores are exact and the top-k is unchanged even on boundary ties.
+    Impacts are computed once per decoded posting and scaled by w per
+    (query, term); the (query, doc) sums are one np.bincount over a
+    (query, doc) cell stream fed query-major in query-term order, dense or
+    over the sorted unique cells — the same additions in the same order
+    either way, so every mode and both paths are bit-identical.
 
-    Returns (doc_ids, scores, top_buf): every doc scored (segments are
-    disjoint, so the ids are unique) and the updated buffer."""
-    bounds = np.unique(np.concatenate([raw[2] for _, _, raw in terms]))
-    nseg = len(bounds)
-    seg_ub = np.zeros(nseg)
-    covers = []
-    for w, _key, (_n, _data, bl, bm, _off) in terms:
-        ci = np.searchsorted(bl, bounds)
-        valid = ci < len(bl)
-        seg_ub[valid] += w * bm[ci[valid]]
-        covers.append((ci, valid))
-    order = np.argsort(-seg_ub, kind="stable")
-    step = _SEG_CHUNK if prune else nseg
-    kept_ids, kept_scores = [], []
-    for pos in range(0, nseg, step):
-        chunk = order[pos : pos + step]
-        if prune and len(top_buf) >= k:
-            chunk = chunk[seg_ub[chunk] >= top_buf.min()]
-            if len(chunk) == 0:
-                break  # order is ub-descending: the rest is dead too
-        sel = np.zeros(nseg, dtype=bool)
-        sel[chunk] = True
-        docs_l, contrib_l = [], []
-        for (w, key, raw), (ci, valid) in zip(terms, covers):
-            need = np.unique(ci[sel & valid])
-            if len(need) == 0:
-                continue
-            ids, tfs, dls = decode(key, raw, need)
-            keep = sel[np.searchsorted(bounds, ids)]
-            if mask is not None:
-                # reference semantics: filtered docs skipped during
-                # traversal (bm25.dart:644); mask-only ⇒ the upper bounds
-                # stay valid (pruning exact)
-                keep &= mask(ids)
-            if not keep.any():
-                continue
-            tfs = tfs[keep].astype(np.float64)
-            norm = (1.0 - b) + b * dls[keep].astype(np.float64) / avgdl
-            # float-association contract with the WAND bounds: the
-            # per-posting partial is computed EXACTLY as
-            # codec.pack_postings computes block_max (same ops, same
-            # order), then scaled by w = qtf*idf — the same product the
-            # bounds use. IEEE rounding is monotonic, so score <= bound
-            # holds in floats, not just in math; a different association
-            # can put a true score 1 ulp ABOVE its "upper bound" and mask
-            # an equal-scored doc.
-            contrib_l.append(w * (tfs * (k1 + 1.0) / (tfs + k1 * norm)))
-            docs_l.append(ids[keep])
-        if not docs_l:
-            continue
-        # dense accumulate over shard-local slots (no sort): every
-        # contribution is > 0, so touched slots are exactly the nonzero
-        # ones (reference's sparse `touched`, bm25.dart:633). bincount adds
-        # each slot's contributions in input order — query-term order on
-        # both paths, so driver and cluster scores are bit-identical.
-        dense = np.bincount(
-            np.concatenate(docs_l) - shard_base,
-            weights=np.concatenate(contrib_l),
+    **Batch mode**: every block of the batch's blobs is decoded ONCE (one
+    bulk decode per _CHUNK_BYTES slice of blocks), however many queries
+    use it. Queries are then scored in chunks of about _CHUNK_BYTES, each
+    with one accumulator: dense (query x span) when the batch's Q x span
+    cells are at most _DENSE_RATIO x its (query, posting) pairs, sparse
+    (sorted cells) otherwise, so a wide shard costs the pairs, not
+    Q x span. Peak memory: 16 bytes (id, impact) per decoded posting,
+    held for the call, plus about _CHUNK_BYTES for the step in progress
+    (``tools/kernel_span.py`` measures both).
+
+    **Pruned mode** (``prune``, one query, more than one block of
+    postings): block-max WAND. The terms' block_last boundaries cut the
+    shard into segments, each covered by one block per term, scored in
+    upper-bound order, _SEG_CHUNK per bulk decode; once the top-k is full,
+    a segment whose summed block maxima cannot reach theta is skipped (a
+    block all of whose segments are skipped is never decoded) and the
+    first dead chunk ends the shard. Exact: the maxima are true bounds in
+    the scores' float association, pruning is strict ('< theta'), and a
+    kept doc has all its blocks decoded. A batch does not prune: on
+    400-query batches the batch mode beat per-query WAND at every shard
+    span measured, up to 1<<20 docs (BENCH_NOTES.md, "Shard kernel")."""
+    keys = list(dict.fromkeys(key for q in queries for _, key in q))
+    if not keys:
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)
+    raws = [blobs[key] for key in keys]
+    kpos = {key: i for i, key in enumerate(keys)}
+    # one (query slot, blob, w) row per query term, query-major
+    q_slot, q_blob, q_w = (
+        np.array(col)
+        for col in zip(
+            *[(j, kpos[key], w) for j, q in enumerate(queries) for w, key in q]
         )
-        nz = np.flatnonzero(dense)
-        kept_ids.append(nz + shard_base)
-        kept_scores.append(dense[nz])
-        # running top-k buffer: a theta update costs O(chunk docs + k),
-        # not a partition over everything scored so far
-        top_buf = np.concatenate((top_buf, dense[nz]))
-        if len(top_buf) > k:
-            top_buf = np.partition(top_buf, -k)[-k:]
-    if not kept_ids:
-        return np.empty(0, np.int64), np.empty(0), top_buf
-    return np.concatenate(kept_ids), np.concatenate(kept_scores), top_buf
+    )
+    span = 1 + max(int(r[2][-1]) for r in raws) - shard_base
+
+    def impacts(sels, keep=None):
+        """(postings per blob, doc ids, impacts) of the selected blocks,
+        blob after blob (``keep(ids)``: the postings to use)."""
+        ids, tfs, dls, counts = codec.unpack_blocks_bulk(
+            [(r[1], r[0], shard_base, r[2], r[4]) for r in raws], sels
+        )
+        keep = np.ones(len(ids), bool) if keep is None else keep(ids)
+        if mask is not None:
+            keep &= mask(ids)
+        counts = np.bincount(
+            np.repeat(np.arange(len(raws)), counts)[keep], minlength=len(raws)
+        )
+        ids, tfs = ids[keep], tfs[keep].astype(np.float64)
+        norm = (1.0 - b) + b * dls[keep].astype(np.float64) / avgdl
+        # computed EXACTLY as codec.pack_postings computes block_max, then
+        # scaled by w = qtf*idf as the bounds are: IEEE rounding is
+        # monotonic, so score <= bound holds in floats (another association
+        # can put a score 1 ulp above its bound and mask a tied doc)
+        return counts, ids, tfs * (k1 + 1.0) / (tfs + k1 * norm)
+
+    def topk(rows, counts, ids, imp, dense):
+        """Per-query top-k (slot, doc, score) of the query-term ``rows`` (a
+        query-major slice) over decoded postings (``counts`` per blob)."""
+        lo, hi = q_slot[rows][0], q_slot[rows][-1] + 1
+        n_r = counts[q_blob[rows]]
+        skip = (np.cumsum(counts) - counts)[q_blob[rows]] - np.cumsum(n_r) + n_r
+        # posting index of every (query, term, posting), query-major
+        src = np.arange(n_r.sum()) + np.repeat(skip, n_r)
+        cell = np.repeat(q_slot[rows] - lo, n_r) * span + (ids[src] - shard_base)
+        weights = np.repeat(q_w[rows], n_r) * imp[src]
+        if dense:
+            acc = np.bincount(cell, weights, (hi - lo) * span).reshape(-1, span)
+            # every weight is > 0: touched cells are the nonzero ones
+            # (reference's sparse `touched`, bm25.dart:633)
+            cand = acc > 0
+            if span > k:
+                cand &= acc >= np.partition(acc, span - k, axis=1)[:, [span - k]]
+            cell = np.flatnonzero(cand)
+            scores = acc.ravel()[cell]
+        else:
+            cell, inv = np.unique(cell, return_inverse=True)
+            scores = np.bincount(inv, weights)
+        slot, doc = np.divmod(cell, span)
+        return _rank_cut(slot + lo, doc + shard_base, scores, k)
+
+    n_post = np.array([r[0] for r in raws])
+    if prune and len(queries) == 1 and n_post.sum() > codec.BLOCK:
+        bounds = np.unique(np.concatenate([r[2] for r in raws]))
+        seg_ub = np.zeros(len(bounds))
+        covers = []
+        for w, (_n, _data, bl, bm, _off) in zip(q_w, raws):
+            ci = np.searchsorted(bl, bounds)
+            valid = ci < len(bl)
+            seg_ub[valid] += w * bm[ci[valid]]
+            covers.append((ci, valid))
+        order = np.argsort(-seg_ub, kind="stable")
+        buf = np.empty(0) if top_buf is None else top_buf
+        kept_ids, kept_scores = [np.empty(0, np.int64)], [np.empty(0)]
+        for pos in range(0, len(bounds), _SEG_CHUNK):
+            chunk = order[pos : pos + _SEG_CHUNK]
+            if len(buf) >= k:
+                chunk = chunk[seg_ub[chunk] >= buf.min()]
+                if len(chunk) == 0:
+                    break  # order is ub-descending: the rest is dead too
+            sel = np.zeros(len(bounds), dtype=bool)
+            sel[chunk] = True
+            counts, ids, imp = impacts(
+                [np.unique(ci[sel & valid]) for ci, valid in covers],
+                lambda ids: sel[np.searchsorted(bounds, ids)],
+            )
+            dense = span <= _DENSE_RATIO * counts.sum()
+            _, ids, scores = topk(slice(None), counts, ids, imp, dense)
+            kept_ids.append(ids)
+            kept_scores.append(scores)
+            buf = np.concatenate((buf, scores))
+            if len(buf) > k:
+                buf = np.partition(buf, -k)[-k:]
+        ids = np.concatenate(kept_ids)
+        return _rank_cut(
+            np.zeros(len(ids), np.int64), ids, np.concatenate(kept_scores), k
+        )
+
+    # every block of every blob, decoded once in slices of `step` blocks
+    nblk = [len(r[2]) for r in raws]
+    first, step = np.cumsum(nblk) - nblk, _CHUNK_BYTES // (160 * codec.BLOCK)
+    ids, imp = np.empty(n_post.sum(), np.int64), np.empty(n_post.sum())
+    counts, fill = 0, 0
+    for g0 in range(0, sum(nblk), step):
+        c, ids_s, imp_s = impacts(
+            [
+                np.arange(max(g0 - f, 0), min(g0 + step - f, nb))
+                for f, nb in zip(first.tolist(), nblk)
+            ]
+        )
+        counts, end = counts + c, fill + len(ids_s)
+        ids[fill:end], imp[fill:end], fill = ids_s, imp_s, end
+    ids, imp = ids[:fill], imp[:fill]
+
+    # query chunks of about _CHUNK_BYTES each
+    pairs = np.bincount(q_slot, counts[q_blob], len(queries))
+    dense = len(queries) * span <= _DENSE_RATIO * pairs.sum()
+    words = _PAIR_WORDS * pairs + (3 * span if dense else 0)
+    piece = (np.cumsum(words) - words) // (_CHUNK_BYTES // 8)
+    cuts = [0, *(np.flatnonzero(np.diff(piece)) + 1).tolist(), len(queries)]
+    out = [], [], []
+    for lo, hi in zip(cuts[:-1], cuts[1:]):
+        r0, r1 = np.searchsorted(q_slot, [lo, hi])
+        if r0 < r1:
+            for o, part in zip(out, topk(slice(r0, r1), counts, ids, imp, dense)):
+                o.append(part)
+    return tuple(np.concatenate(o) for o in out)
 
 
 def _driver_topk(
@@ -473,7 +518,6 @@ def _driver_topk(
     # shared across the batch's queries are fetched once (_raw_blob_cache).
     blobs_complete = bool(index.__dict__.get("_blobs_complete"))
     cache = index.__dict__.setdefault("_raw_blob_cache", {})
-    decode = functools.partial(_driver_blocks, index)
     k_eff = per_partition_limit or limit
 
     results: list[tuple] = []
@@ -511,15 +555,14 @@ def _driver_topk(
             # k-th score strictly beats a shard's bound (this shard and all
             # remaining are never fetched nor decoded)
             order = sorted(shard_ub, key=lambda s: -shard_ub[s])
-            top_buf = np.empty(0, dtype=np.float64)
-            kept_ids: list[np.ndarray] = []
-            kept_scores: list[np.ndarray] = []
+            # the pk's running top-k, by (score desc, doc_id asc)
+            ids_k, top_buf = np.empty(0, np.int64), np.empty(0)
             fetch_hi = 0  # shards order[:fetch_hi] have been ensured
             for si, shard in enumerate(order):
                 if (
                     prune
                     and len(top_buf) >= k_eff
-                    and shard_ub[shard] < top_buf.min()
+                    and shard_ub[shard] < top_buf[-1]
                 ):
                     break
                 if not blobs_complete and si >= fetch_hi:
@@ -537,29 +580,22 @@ def _driver_topk(
                         _fetch_raw_blobs(index, want)
                     fetch_hi = hi
                 terms = [
-                    (w, (pk, t, shard), cache[(pk, t, shard)])
+                    (w, (pk, t, shard))
                     for t, w in shard_terms[shard]
                     if (pk, t, shard) in cache
                 ]
-                if not terms:
-                    continue
-                ids, scores, top_buf = score_shard(
-                    terms, shard * index.shard_size, st[1], index.k1,
-                    index.b, k_eff, top_buf, decode, mask, prune,
+                _, ids, scores = score_shard(
+                    [terms], cache, shard * index.shard_size, st[1],
+                    index.k1, index.b, k_eff, mask, top_buf, prune,
                 )
-                if len(ids):
-                    kept_ids.append(ids)
-                    kept_scores.append(scores)
-            if not kept_ids:
-                continue
-            ids = np.concatenate(kept_ids)
-            scores = np.concatenate(kept_scores)
+                ids = np.concatenate((ids_k, ids))
+                _, ids_k, top_buf = _rank_cut(
+                    np.zeros(len(ids), np.int64), ids,
+                    np.concatenate((top_buf, scores)), k_eff,
+                )
             k_trim = per_partition_limit if per_partition_limit is not None else limit
-            if len(ids) > k_trim:
-                # exact top-k with (score desc, doc_id asc) tie-break
-                sel = np.lexsort((ids, -scores))[:k_trim]
-                ids, scores = ids[sel], scores[sel]
-            per_pk.append((pk, ids, scores))
+            if len(ids_k[:k_trim]):
+                per_pk.append((pk, ids_k[:k_trim], top_buf[:k_trim]))
         if not per_pk:
             continue
         # global merge across pks (≤ limit·n_pk candidates — tiny)
@@ -650,8 +686,8 @@ def _cluster_scored(
     chosen at plan time as ceil(default parallelism / shard groups), capped
     at the batch size, so a 1000-query batch over Zipf-hot terms on a big
     index (shards >= slots) ships every blob exactly once and scores all
-    1000 queries in one pass per shard, sharing the varint block decodes
-    across queries.
+    1000 queries in one kernel call per shard: each block varint-decoded
+    once, shared by every query using its term.
 
     Task shape: the joined blob rows are repartitioned by (pk, shard,
     bucket) into n_groups x n_buckets partitions — one scoring partition
@@ -661,7 +697,8 @@ def _cluster_scored(
     compressed blobs (a few hundred KB for a 400-query batch) into ONE
     task that scores every (query, shard) pair serially. The explicit
     count keeps one task per group (``indexer._merge_runs_exchange``
-    guards its merge the same way)."""
+    guards its merge the same way), and each group is one ``score_shard``
+    call."""
     shard_size = index.shard_size
     k1, b = index.k1, index.b
     spark = index.spark
@@ -784,23 +821,13 @@ def _cluster_scored(
         )
         rows = rows.join(allowed_bm, ["pk", "shard"])
 
-    def _empty_scored() -> pd.DataFrame:
-        return pd.DataFrame(
-            {"query_id": [], "pk": [], "doc_id": [], "score": []}
-        ).astype({"query_id": np.int64, "doc_id": np.int64, "score": np.float64})
-
     def score_group(key, pdf):
-        """Score every query of this bucket against one shard's blobs: one
-        ``score_shard`` call per query, each starting from an empty top-k
-        (theta is local to the task). Block decodes are cached PER TERM
-        and shared across all queries in the task (a hot term's postings
-        decode once per shard, not once per query)."""
+        """Every query of this bucket against one shard's blobs: ONE
+        ``score_shard`` call, decodes shared by all queries using a term."""
         pk, shard, qb = key[0], int(key[1]), int(key[2])
         shard_base = shard * shard_size
-        avgdl = avgdl_map.get(pk)
-        queries = queries_by_bucket.get(qb)
-        if avgdl is None or not queries:
-            return _empty_scored()
+        avgdl = avgdl_map.get(pk)  # a pk without stats scores nothing
+        queries = queries_by_bucket.get(qb, []) if avgdl is not None else []
         mask = None
         if has_filter:
             bits = np.unpackbits(
@@ -814,44 +841,21 @@ def _cluster_scored(
             term: _raw_blob(*cols)
             for term, *cols in zip(pdf["term"], *(pdf[c] for c in _BLOB_COLS))
         }
-        dec_cache: dict = {}
-
-        def decode(term, raw, need):
-            return _decode_blocks(dec_cache, term, raw, shard_base, need)
-
-        frames = []
-        for qid, tq in queries:
-            terms = []
-            for term, qtf in tq:
-                idf = idf_map.get((pk, term))
-                if idf is not None and term in raw_by_term:
-                    terms.append((qtf * idf, term, raw_by_term[term]))
-            if not terms:
-                continue
-            ids, scores, _ = score_shard(
-                terms, shard_base, avgdl, k1, b, group_limit,
-                np.empty(0, dtype=np.float64), decode, mask,
-            )
-            if len(ids) > group_limit:
-                # exact cut with the global (score desc, doc_id asc)
-                # tie-break: an equal-scored doc at the k boundary must not
-                # be dropped by an order-agnostic partition
-                sel = np.lexsort((ids, -scores))[:group_limit]
-                ids, scores = ids[sel], scores[sel]
-            if len(ids):
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.int64(qid),
-                            "pk": pk,
-                            "doc_id": ids,
-                            "score": scores,
-                        }
-                    )
-                )
-        if not frames:
-            return _empty_scored()
-        return pd.concat(frames, ignore_index=True)
+        terms = [
+            [
+                (qtf * idf_map[(pk, term)], term)
+                for term, qtf in tq
+                if (pk, term) in idf_map and term in raw_by_term
+            ]
+            for _, tq in queries
+        ]
+        slot, ids, scores = score_shard(
+            terms, raw_by_term, shard_base, avgdl, k1, b, group_limit, mask
+        )
+        qids = np.array([qid for qid, _ in queries], dtype=np.int64)
+        return pd.DataFrame(
+            {"query_id": qids[slot], "pk": pk, "doc_id": ids, "score": scores}
+        )
 
     return (
         rows.repartition(n_groups * n_buckets, "pk", "shard", "qb")

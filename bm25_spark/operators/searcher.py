@@ -1,7 +1,7 @@
 """Query-time top-k BM25 API (reference operators O10-O15, O17-O18).
 
 Every search scores the packed posting blobs through one per-shard
-block-max WAND kernel (``packed.score_shard``); ``packed.search_packed``
+batch kernel (``packed.score_shard``); ``packed.search_packed``
 picks where that kernel runs — in-process on the driver for interactive
 queries, inside a grouped ``applyInPandas`` for big batches and filters.
 This module holds the public entry points plus the pieces both routes

@@ -162,6 +162,230 @@ def test_pack_runs_bulk_matches_per_run_and_guards():
         codec.pack_runs_bulk(ids, tfs, dls, s2, e2, bases)
 
 
+def _corrupt_variants(data: bytes):
+    """A truncated copy and copies with one continuation bit flipped."""
+    yield data[:-1]
+    for pos in (0, len(data) // 2, len(data) - 1):
+        flipped = bytearray(data)
+        flipped[pos] ^= 0x80
+        yield bytes(flipped)
+
+
+def test_codec_corrupt_blob_raises(spark):
+    """Every decoder checks the decoded value count and raises ValueError —
+    also under ``python -O`` — instead of scoring a truncated or
+    bit-flipped blob."""
+    import pyspark.sql.functions as F
+
+    from bm25_spark.operators.indexer import _DL_TERM, doclens_view
+
+    rng = np.random.default_rng(4)
+    ids = np.sort(rng.choice(5000, size=400, replace=False))
+    tfs = rng.integers(1, 300, 400)
+    dls = rng.integers(1, 5000, 400)
+    data, n, bl, _bm, off = codec.pack_postings(
+        ids, tfs, dls, 0, 1.2, 0.75, 50.0
+    )
+    bl, off = np.asarray(bl), np.asarray(off)
+    everything = np.arange(len(bl))
+    decoders = [
+        lambda d: codec.decode_varints(d, 3 * n),
+        lambda d: codec.unpack_postings(d, n, 0),
+        lambda d: codec.unpack_blocks(d, n, 0, bl, off, everything),
+        lambda d: codec.unpack_blocks_bulk(
+            [(data, n, 0, bl, off), (d, n, 0, bl, off)], [everything] * 2
+        ),
+    ]
+    for bad in _corrupt_variants(data):
+        for decode in decoders:
+            with pytest.raises(ValueError, match="corrupt postings blob"):
+                decode(bad)
+    with pytest.raises(ValueError, match="corrupt postings blob"):
+        codec.decode_varints(b"\x81\x80")  # ends inside a varint
+
+    # the doclens view decodes (doc id delta, dl) pairs on the executors
+    pairs = np.empty(2 * n, np.uint64)
+    pairs[0::2] = np.diff(ids, prepend=0)
+    pairs[1::2] = dls
+    good = codec.encode_varints(pairs)
+    runs = spark.createDataFrame(
+        [(_DL_TERM, "", n, good)], "term string, pk string, n int, data binary"
+    )
+    assert [r["doc_id"] for r in doclens_view(runs).collect()] == ids.tolist()
+    for bad in _corrupt_variants(good):
+        bad_runs = runs.withColumn("data", F.lit(bad))
+        with pytest.raises(Exception, match="corrupt postings blob"):
+            doclens_view(bad_runs).collect()
+
+
+def kernel_shards(oracle: OracleBM25, shard_size: int) -> dict:
+    """{shard: {term: raw blob}}: the oracle's postings packed per
+    doc-range shard the way the engine packs them."""
+    from bm25_spark.operators.packed import _raw_blob
+
+    shards: dict = {}
+    for term, post in oracle.term_docs.items():
+        ids = np.array([d for d, _ in post], np.int64)
+        tfs = np.array([tf for _, tf in post], np.int64)
+        dls = np.array([oracle.dl[d] for d in ids], np.int64)
+        for s in np.unique(ids // shard_size).tolist():
+            m = ids // shard_size == s
+            data, n, bl, bm, off = codec.pack_postings(
+                ids[m], tfs[m], dls[m], s * shard_size,
+                oracle.k1, oracle.b, oracle.avgdl,
+            )
+            shards.setdefault(s, {})[term] = _raw_blob(n, data, bl, bm, off)
+    return shards
+
+
+def kernel_terms(oracle: OracleBM25, queries, blobs) -> list[list[tuple]]:
+    """score_shard's per-query (w = qtf*idf, term) lists for one shard."""
+    from bm25_spark.functions.analyzer import query_term_counts
+
+    return [
+        [
+            (qtf * oracle.idf[t], t)
+            for t, qtf in query_term_counts(q, oracle.stopwords).items()
+            if t in blobs
+        ]
+        for q in queries
+    ]
+
+
+def _kernel_corpus():
+    """700 docs with a role field; 'alpha' in 2/3 of them, so at
+    shard_size 350 its per-shard list spans two blocks."""
+    rng = np.random.default_rng(9)
+    words = ["beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
+    texts = []
+    for i in range(700):
+        toks = list(rng.choice(words, size=int(rng.integers(1, 9))))
+        if i % 3:
+            toks += ["alpha"] * int(rng.integers(1, 4))
+        texts.append((" ".join(toks), {"role": "user" if i % 2 else "bot"}))
+    queries = [
+        "alpha", "alpha beta", "gamma delta eps", "beta beta theta",
+        "zeta", "eta alpha gamma", "unknown", "theta eps",
+    ]
+    return OracleBM25(texts, index_fields=["role"]), queries
+
+
+def test_batch_kernel_matches_pruned_mode_and_oracle(monkeypatch):
+    """One score_shard call over a query batch, per-query calls (the
+    pruned mode for the long 'alpha' lists, the batch mode for the rest)
+    and prune=False agree bit-for-bit per shard (ids, ranks, raw floats),
+    with and without a filter mask; merged over shards they give the
+    oracle's ids and ranks, with scores within 1e-9 (the oracle multiplies
+    idf*tf first, a different float association)."""
+    import functools
+
+    from bm25_spark.operators import packed as packed_mod
+
+    oracle, queries = _kernel_corpus()
+    shards = kernel_shards(oracle, 350)
+    k = 7
+    for flt in (None, {"role": "user"}):
+        mask = None
+        if flt:
+            allow = np.array(sorted(oracle._allowed(flt)), np.int64)
+            mask = functools.partial(packed_mod._in_sorted, allow)
+        merged: dict = {}
+        for s, blobs in shards.items():
+            terms = kernel_terms(oracle, queries, blobs)
+            args = (blobs, s * 350, oracle.avgdl, oracle.k1, oracle.b, k)
+            slot, ids, scores = packed_mod.score_shard(terms, *args, mask)
+            for j, tq in enumerate(terms):
+                m = slot == j
+                for prune in (True, False):
+                    one = packed_mod.score_shard(
+                        [tq], *args, mask, None, prune
+                    )
+                    assert not one[0].any(), (j, prune)
+                    assert np.array_equal(one[1], ids[m]), (j, prune)
+                    assert np.array_equal(one[2], scores[m]), (j, prune)
+                merged.setdefault(j, []).extend(zip(ids[m], scores[m]))
+        for j, q in enumerate(queries):
+            got = sorted(merged.get(j, []), key=lambda r: (-r[1], r[0]))[:k]
+            want = oracle.search(q, limit=k, flt=flt)
+            assert [d for d, _ in got] == [d for d, _ in want], (q, flt)
+            for (_, gs), (_, ws) in zip(got, want):
+                assert abs(gs - ws) < 1e-9, (q, flt)
+
+    # the single long-list query really takes the pruned mode: a full
+    # running top-k above every bound decodes nothing and returns nothing
+    calls = {"n": 0}
+    real = codec.unpack_blocks_bulk
+
+    def counting(blobs, sels):
+        calls["n"] += 1
+        return real(blobs, sels)
+
+    monkeypatch.setattr(codec, "unpack_blocks_bulk", counting)
+    blobs = shards[0]
+    [alpha] = kernel_terms(oracle, ["alpha"], blobs)
+    assert blobs["alpha"][0] > codec.BLOCK
+    got = packed_mod.score_shard(
+        [alpha], blobs, 0, oracle.avgdl, oracle.k1, oracle.b, k,
+        top_buf=np.full(k, np.inf),
+    )
+    assert len(got[1]) == 0 and calls["n"] == 0
+
+
+def test_batch_kernel_decodes_once_and_chunks(monkeypatch):
+    """A direct score_shard call over a batch decodes every block of the
+    group's blobs exactly once — in ONE codec.decode_varints call while
+    they fit one decode slice — and scores the batch in one accumulator
+    pass. A budget small enough to force several decode slices and >= 3
+    query chunks, and either accumulator (dense or sparse), give
+    bit-identical results."""
+    from bm25_spark.operators import packed as packed_mod
+
+    oracle, queries = _kernel_corpus()
+    blobs = kernel_shards(oracle, 350)[1]
+    terms = kernel_terms(oracle, queries * 3, blobs)
+    n_blocks = sum(len(blobs[t][2]) for t in {t for tq in terms for _, t in tq})
+    calls: dict = {}
+    real_decode = codec.decode_varints
+    real_bulk = codec.unpack_blocks_bulk
+    real_cut = packed_mod._rank_cut
+
+    def decode(*a, **kw):
+        calls["decode"] += 1
+        return real_decode(*a, **kw)
+
+    def bulk(blobs_, sels):
+        calls["blocks"] += sum(len(s_) for s_ in sels)
+        return real_bulk(blobs_, sels)
+
+    def cut(*a):
+        calls["chunks"] += 1  # one top-k cut per query chunk
+        return real_cut(*a)
+
+    monkeypatch.setattr(codec, "decode_varints", decode)
+    monkeypatch.setattr(codec, "unpack_blocks_bulk", bulk)
+    monkeypatch.setattr(packed_mod, "_rank_cut", cut)
+    args = (terms, blobs, 350, oracle.avgdl, oracle.k1, oracle.b, 5)
+
+    def run():
+        calls.update(decode=0, blocks=0, chunks=0)
+        return packed_mod.score_shard(*args)
+
+    whole = run()
+    assert calls == {"decode": 1, "blocks": n_blocks, "chunks": 1}
+    assert len(set(whole[0].tolist())) == sum(1 for tq in terms if tq)
+    variants = [("_CHUNK_BYTES", 48_000), ("_DENSE_RATIO", 0)]
+    variants.append(("_DENSE_RATIO", 1e18))
+    for name, value in variants:
+        with monkeypatch.context() as m:
+            m.setattr(packed_mod, name, value)
+            got = run()
+        if name == "_CHUNK_BYTES":
+            assert calls["chunks"] >= 3 and calls["decode"] >= 2, calls
+        assert calls["blocks"] == n_blocks, (name, value)
+        for a, b in zip(whole, got):
+            assert np.array_equal(a, b), (name, value)
+
+
 def test_packed_golden_scores(packed_golden):
     for q, expected in GOLDEN.items():
         res = search_packed(packed_golden, [(0, q)], limit=3)
@@ -309,17 +533,17 @@ def test_block_wand_identical_and_active(spark, monkeypatch):
     assert idx.packed.select(F.max(F.size("block_max"))).first()[0] >= 2
 
     calls = {"n": 0, "blocks": 0}
-    real = codec.unpack_blocks
+    real = codec.unpack_blocks_bulk
 
-    def counting(*a, **kw):
+    def counting(blobs, sels):
         calls["n"] += 1
-        calls["blocks"] += len(a[5])
-        return real(*a, **kw)
+        calls["blocks"] += sum(len(s) for s in sels)
+        return real(blobs, sels)
 
-    monkeypatch.setattr(codec, "unpack_blocks", counting)
-    # every decode goes through unpack_blocks, so the call count alone no
-    # longer shows pruning: on a cold block cache, the last shard visited
-    # (theta = the spike score by then) must skip its block 1
+    monkeypatch.setattr(codec, "unpack_blocks_bulk", counting)
+    # every decode goes through unpack_blocks_bulk, so the call count alone
+    # does not show pruning: the last shard visited (theta = the spike
+    # score by then) must skip its block 1
     search_packed(idx, [(0, "alpha")], limit=3, prune=True).collect()
     n_alpha_blocks = (
         idx.packed.filter(F.col("term") == "alpha")

@@ -8,6 +8,7 @@ repeated query terms, unknown query terms, all-stopword queries, and
 stopword builds.
 """
 
+import numpy as np
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -104,6 +105,62 @@ def test_packed_engine_matches_oracle(spark, corpus, queries, use_stop):
     assert set(got0) == set(want0), q0
     for d, s in want0.items():
         assert abs(got0[d] - s) <= 1e-9, (q0, d)
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    seed=st.integers(0, 2**32 - 1),
+    n_docs=st.integers(1, 400),
+    shard_size=st.integers(1, 400),
+    n_queries=st.integers(1, 12),
+    k=st.integers(1, 20),
+    filtered=st.booleans(),
+    dense_ratio=st.sampled_from([0.0, 8.0, 1e18]),
+)
+def test_batch_kernel_matches_per_query(
+    seed, n_docs, shard_size, n_queries, k, filtered, dense_ratio
+):
+    """One score_shard call over a whole query batch — with the sparse,
+    the measured or the dense accumulator — returns, for every query,
+    exactly (ids, order, raw float scores) what a call with that query
+    alone returns, in both the pruned and the unpruned mode, over random
+    corpora (lists past one block included) and filter masks."""
+    import functools
+
+    from test_packed import kernel_shards, kernel_terms
+
+    from bm25_spark.operators import packed as packed_mod
+
+    rng = np.random.default_rng(seed)
+    texts = [
+        " ".join(rng.choice(VOCAB, size=int(rng.integers(0, 12))))
+        for _ in range(n_docs)
+    ]
+    queries = [
+        " ".join(rng.choice(VOCAB + ["zzq"], size=int(rng.integers(1, 5))))
+        for _ in range(n_queries)
+    ]
+    if not any(texts):
+        return
+    oracle = OracleBM25(texts, stopwords=set(STOP))
+    mask = None
+    allow = np.flatnonzero(rng.random(n_docs) < 0.5)
+    if filtered and len(allow):
+        mask = functools.partial(packed_mod._in_sorted, allow)
+    for s, blobs in kernel_shards(oracle, shard_size).items():
+        terms = kernel_terms(oracle, queries, blobs)
+        args = (blobs, s * shard_size, oracle.avgdl, oracle.k1, oracle.b, k)
+        default, packed_mod._DENSE_RATIO = packed_mod._DENSE_RATIO, dense_ratio
+        try:
+            slot, ids, scores = packed_mod.score_shard(terms, *args, mask)
+        finally:
+            packed_mod._DENSE_RATIO = default
+        for j, tq in enumerate(terms):
+            m = slot == j
+            for prune in (True, False):
+                one = packed_mod.score_shard([tq], *args, mask, None, prune)
+                assert np.array_equal(one[1], ids[m]), (s, j, prune)
+                assert np.array_equal(one[2], scores[m]), (s, j, prune)
 
 
 # ---------------------------------------------------------------------------

@@ -158,6 +158,12 @@ def test_lid_profiles_module_in_sync():
     }
     assert lid_tune.NORM_CLASS == lid_profiles.LANG_NORM_CLASS
     assert lid_tune.MAX_CHARS == lid_profiles.LANG_MAX_CHARS
+    # the shipped weight rule is the generator's canonical one
+    for lang, pats in lid_profiles.LANG_PATTERNS.items():
+        for p in pats:
+            assert lid_profiles.pattern_weight(p) == lid_tune.pattern_weight(
+                p
+            ), (lang, p)
 
 
 def test_lang_id_heldout_accuracy_floor(spark):

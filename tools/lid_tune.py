@@ -31,6 +31,7 @@ Usage: python tools/lid_tune.py   # regenerates the module + dev readout
 
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import re
@@ -244,6 +245,12 @@ def build_profiles(
     return profiles
 
 
+def pattern_weight(pat: str) -> int:
+    """High-precision patterns count double: whole padded words (space on
+    both sides) and morphemes longer than a trigram. Trigrams weight 1."""
+    return 2 if len(pat) > 3 or (pat[0] == ' ' and pat[-1] == ' ') else 1
+
+
 def dev_readout(profiles: dict[str, list[str]]) -> tuple[float, dict]:
     """Accuracy on the dev half of the fixture — a VALIDATION readout
     only; nothing in build_profiles consumes it."""
@@ -255,7 +262,6 @@ def dev_readout(profiles: dict[str, list[str]]) -> tuple[float, dict]:
     confusions: dict[str, int] = {}
     for lang, text in dev:
         s = normalize(text)
-        from bm25_spark.functions.lid_profiles import pattern_weight
         scores = {
             L: sum(
                 pattern_weight(t) * count_nonoverlap(s, t)
@@ -294,14 +300,8 @@ def write_module(profiles: dict[str, list[str]]) -> None:
         f.write(f"LANG_NORM_CLASS = {NORM_CLASS!r}\n")
         f.write(f"LANG_MAX_CHARS = {MAX_CHARS}\n")
         f.write(f"LANG_ORDER = {order!r}\n\n")
-        f.write(
-            "\ndef pattern_weight(pat: str) -> int:\n"
-            '    \"\"\"High-precision patterns count double: whole padded'
-            " words (space on\n    both sides) and morphemes longer than a"
-            ' trigram. Trigrams weight 1.\"\"\"\n'
-            "    return 2 if len(pat) > 3 or ("
-            "pat[0] == ' ' and pat[-1] == ' ') else 1\n\n\n"
-        )
+        # the weight rule ships verbatim: this file is its only source
+        f.write("\n" + inspect.getsource(pattern_weight) + "\n\n")
         f.write("LANG_PATTERNS = {\n")
         for lang in order:
             f.write(f"    {lang!r}: [\n")
@@ -316,10 +316,8 @@ def write_module(profiles: dict[str, list[str]]) -> None:
 if __name__ == "__main__":
     profiles = build_profiles()
     # ALWAYS regenerate (deterministic from the lexicons, so overwriting
-    # is harmless) and write BEFORE scoring: dev_readout imports
-    # pattern_weight from the generated module, which must reflect this
-    # run — scoring fresh profiles with a stale committed module would
-    # print a readout that doesn't correspond to what ships
+    # is harmless): the readout below scores these profiles, and the
+    # committed module must be what it scored
     write_module(profiles)
     print(f"wrote {GENERATED_MODULE}")
     acc, detail = dev_readout(profiles)

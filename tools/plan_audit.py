@@ -95,7 +95,10 @@ def main() -> int:
             "The WHOLE query batch scores per (pk, shard) group: packed "
             "blobs cross the shuffle once per plan-time bucket (bounded by "
             "parallelism), never once per query, into one scoring "
-            "partition per (pk, shard, bucket) group. Look for: exactly "
+            "partition per (pk, shard, bucket) group, where ONE "
+            "score_shard call scores all the bucket's queries (each block "
+            "varint-decoded once, one bincount per query chunk). "
+            "Look for: exactly "
             "one blob-side Exchange hashpartitioning(pk, shard, qb, "
             "n_groups x n_buckets) marked REPARTITION_BY_NUM (an explicit "
             "count AQE does not coalesce) directly under the "
