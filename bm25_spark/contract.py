@@ -1187,12 +1187,11 @@ SELECT a, b, jaccard FROM (
 
 def _training_ops_oracles() -> dict[str, str]:
     from bm25_spark.operators.textstats import (
-        LANG_MAX_CHARS,
-        LANG_NORM_CLASS,
         LANG_ORDER,
         STOPWORDS_EN,
+        lang_norm_sql,
+        lid_score_sql,
     )
-    from bm25_spark.operators.textstats import lid_score_sql
 
     stoplist = ", ".join(f"'{w}'" for w in STOPWORDS_EN)
     # pattern-profile LID mirror: the SAME generator the Spark operator
@@ -1261,8 +1260,7 @@ FROM q""",
         "ts_lang_id": f"""
 WITH s AS (
   SELECT doc_id,
-         ' ' || regexp_replace(lower(substr(text, 1, {LANG_MAX_CHARS})),
-                               '{LANG_NORM_CLASS}', ' ', 'g') || ' ' AS s
+         {lang_norm_sql(flags=", 'g'")} AS s
   FROM documents
 ), sc AS (
   SELECT doc_id,

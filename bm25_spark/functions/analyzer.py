@@ -66,27 +66,6 @@ _ASCII_TBL = bytes(
 )
 
 
-def doc_tokens(
-    text: str | None,
-    stopwords: frozenset[str] | None = None,
-    stopwords_b: frozenset[bytes] | None = None,
-) -> list:
-    """Build-side token list for one document. ASCII texts run the
-    byte-translate fast path (BYTES tokens); non-ASCII texts fall back to
-    the exact Unicode regex path (str tokens). The two token types may
-    coexist across documents: the pack pipeline decodes bytes vocabulary
-    entries to str at emission, so the same term reaches the term-merge
-    shuffle identically from either path."""
-    if not text:
-        return []
-    if text.isascii():
-        raw = text.encode().translate(_ASCII_TBL).split()
-        if stopwords_b:
-            return [w for w in raw if len(w) >= 2 and w not in stopwords_b]
-        return [w for w in raw if len(w) >= 2]
-    return tokenize_text(text, stopwords)
-
-
 def make_tokenize_udf(stopwords=None):
     """Returns a pandas UDF Column-function: text -> array<string> terms."""
     stop = frozenset(stopwords) if stopwords else None

@@ -12,11 +12,14 @@ from __future__ import annotations
 import math
 import re
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bm25_spark.functions import codec
 from bm25_spark.functions.analyzer import tokenize_text
 from bm25_spark.operators.indexer import BM25Index
+from bm25_spark.operators.packed import query_cache
 from bm25_spark.operators.searcher import search
 
 _ROCCHIO_SPLIT = re.compile(r"\W+", re.UNICODE)
@@ -99,50 +102,39 @@ def _relevant_term_counts_warm(
     index: BM25Index, doc_ids: list[int]
 ) -> list[tuple[dict[str, int], int]] | None:
     """(term -> tf, dl) per relevant doc, served from the warmed head's
-    postings caches — ZERO Spark jobs. Requires a COMPLETE warm
-    (packed.warm_query_caches preloaded the term dictionary AND every
-    blob); returns None otherwise, or when any requested id is absent
-    from the postings (an id missing there is ambiguous between
-    "nonexistent doc" — which must not count toward Rocchio's ``found``
-    divisor — and "doc whose text is empty/all stopwords" — which must;
-    only the docs table can tell, so the cold path decides).
+    blobs with no Spark job. Requires a head warmed with every blob
+    (packed.warm_query_caches); returns None otherwise, or when any
+    requested id is absent from the postings (an id missing there is
+    ambiguous between "nonexistent doc" — which must not count toward
+    Rocchio's ``found`` divisor — and "doc whose text is empty/all
+    stopwords" — which must; only the docs table decides, on the cold path).
 
     Cost: postings are doc-sorted and block-indexed, so only the blocks
-    whose doc-id range covers a requested id are decoded — O(vocab ×
+    whose doc-id range covers a requested id are decoded — O(blobs ×
     |relevant ids|) block probes against RAM-resident blobs, then one
     bulk decode of every covering block. The reconstructed counts are
     exactly the reference's ``doc.terms`` multiset (the index stores
     post-stopword analyzer tokens), so the expansion is identical to
     re-tokenizing the stored text."""
-    d = index.__dict__
-    if not (d.get("_blobs_complete") and d.get("_dict_complete")):
+    warm = query_cache(index).warm_blobs()
+    if warm is None:
         return None
-    import numpy as np
-
-    from bm25_spark.functions import codec
-
     wanted = np.unique(np.asarray(doc_ids, dtype=np.int64))
     ssz = index.shard_size
     by_shard = {s: wanted[wanted // ssz == s] for s in set(wanted // ssz)}
-    rcache = d.get("_raw_blob_cache", {})
     blobs, sels, blob_terms = [], [], []
-    for term, by_pk in d.get("_shard_meta_cache", {}).items():
-        for pk, shards in by_pk.items():
-            for shard, _n, _mb in shards:
-                w_arr = by_shard.get(shard)
-                if w_arr is None:
-                    continue
-                raw = rcache.get((pk, term, shard))
-                if raw is None:  # cache mutated under us — play it safe
-                    return None
-                bl = raw[2]  # last doc_id per block
-                need = np.unique(np.searchsorted(bl, w_arr, "left"))
-                need = need[need < len(bl)]
-                if len(need) == 0:
-                    continue
-                blobs.append((raw[1], raw[0], shard * ssz, bl, raw[4]))
-                sels.append(need)
-                blob_terms.append(term)
+    for (_pk, term, shard), raw in warm.items():
+        w_arr = by_shard.get(shard)
+        if w_arr is None:
+            continue
+        bl = raw[2]  # last doc_id per block
+        need = np.unique(np.searchsorted(bl, w_arr, "left"))
+        need = need[need < len(bl)]
+        if len(need) == 0:
+            continue
+        blobs.append((raw[1], raw[0], shard * ssz, bl, raw[4]))
+        sels.append(need)
+        blob_terms.append(term)
     # one bulk decode of every block that covers a requested id
     ids, tfs, dlsa, counts = codec.unpack_blocks_bulk(blobs, sels)
     terms = np.repeat(np.arange(len(blob_terms)), counts)
@@ -168,11 +160,12 @@ def search_with_feedback(
     beta: float = 0.75,
     limit: int = 10,
 ) -> DataFrame:
-    """Rocchio-expanded search. On a warmed packed head (see
-    packed.warm_query_caches) the whole request — relevant-doc term
-    reconstruction, expansion, and the expanded query itself — runs
-    driver-side with ZERO Spark jobs, like any warm query; cold indexes
-    pay one doc_id-pushdown filter+collect for the relevant texts."""
+    """Rocchio-expanded search. On a head warmed with its blobs (see
+    packed.warm_query_caches) the relevant-doc term reconstruction and
+    the expansion run driver-side with no Spark job, and the expanded
+    query is a warm ``search`` (whose ``orderBy("rank")`` runs the only
+    jobs); cold indexes pay one doc_id-pushdown filter+collect for the
+    relevant texts."""
     if not relevant_doc_ids:
         return search(index, query, limit=limit)
     warm = _relevant_term_counts_warm(index, relevant_doc_ids)

@@ -145,21 +145,13 @@ class BM25Index:
             self.enc.unpersist()
 
     def invalidate_caches(self) -> None:
-        """Drop every driver-side query cache (term dictionary, shard
-        metadata, raw/decoded blobs, filter sets, stats) held on this
-        object by the search paths (packed.warm_query_caches and the lazy
-        probes underneath it).
-
-        Cache-coherence contract: caches live in the INDEX OBJECT's
-        ``__dict__``; operators that produce a changed index
-        (merge_indexes, compact_segments, checkpointed builds) return a
-        NEW BM25Index, whose caches start empty — a warmed old object
-        keeps serving its own (still-correct) snapshot. Anything that
-        instead mutates ``packed``/``stats`` on an existing object IN
-        PLACE (e.g. rebinding table attributes by hand) must call this
-        method, or a warmed search head will serve stale postings."""
-        for k in [k for k in self.__dict__ if k.startswith("_")]:
-            del self.__dict__[k]
+        """Drop the query cache (packed.QueryCache) the search paths keep
+        on this object. Operators that change an index (merge_indexes,
+        compact_segments, checkpointed builds) return a NEW BM25Index with
+        an empty cache; code that rebinds ``packed``/``stats``/``terms``
+        on an existing object IN PLACE must call this, or a warmed search
+        head serves stale postings."""
+        self.__dict__.pop("_query_cache", None)
 
 
 def build_index(

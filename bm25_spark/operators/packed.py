@@ -56,6 +56,7 @@ from __future__ import annotations
 
 import functools
 import os
+import sys
 
 import numpy as np
 import pandas as pd
@@ -75,15 +76,12 @@ from bm25_spark.operators.indexer import BM25Index
 from bm25_spark.operators.searcher import (
     RESULT_SCHEMA,
     _filter_predicate,
-    _stats_map,
     empty_result,
 )
 
 # Above this many candidate postings the driver path would pull too much —
-# score on the cluster instead. Overridable for experiments.
-DRIVER_PATH_MAX_POSTINGS = int(
-    os.environ.get("BM25_DRIVER_PATH_MAX_POSTINGS", "20000000")
-)
+# score on the cluster instead.
+DRIVER_PATH_MAX_POSTINGS = 20_000_000
 # The blob FETCH is shared across a batch's queries, but driver SCORING is
 # per-query single-threaded WAND — a batch of Q hot queries costs
 # ~Σ_q Σ_{t∈q} df(t) score-visits even when every blob is cached. Bound
@@ -91,14 +89,16 @@ DRIVER_PATH_MAX_POSTINGS = int(
 # terms silently serializes on the driver while 4N executors idle.
 # ~100M visits ≈ 1 s of driver numpy at 2026 single-core speed — the
 # measured floor of one cluster batch job; past it the cluster path wins.
+# Overridable for experiments.
 DRIVER_PATH_MAX_WORK = int(
     os.environ.get("BM25_DRIVER_PATH_MAX_WORK", "100000000")
 )
 # Metadata filters: the driver path materializes the allowed doc-id set
 # locally only below this cardinality; bigger filters score on the cluster.
-DRIVER_PATH_MAX_ALLOWED = int(
-    os.environ.get("BM25_DRIVER_PATH_MAX_ALLOWED", "2000000")
-)
+DRIVER_PATH_MAX_ALLOWED = 2_000_000
+# Resident bytes (_entry_bytes) one index's QueryCache may hold: the
+# preloaded levels and everything filled lazily, together.
+CACHE_BYTES = 4 << 30
 
 
 def _sql_literal(v) -> str:
@@ -133,100 +133,213 @@ def _qrows(index: BM25Index, queries, stopwords):
 # ---------------------------------------------------------------------------
 
 
-def warm_query_caches(
-    index: BM25Index,
-    max_terms: int = 100_000,
-    preload_blobs: bool = True,
-    max_blob_bytes: int = 4 << 30,
-) -> bool:
-    """Preload the term dictionary + shard metadata — and, when the packed
-    postings fit ``max_blob_bytes``, the blobs themselves — into the driver
-    caches (what a search head does at startup: the index becomes RAM-
-    resident). After warming, a query pays ZERO Spark jobs on the hot
-    path — probe, prune, decode, and score are all in-process numpy; the
-    cluster path remains the route for oversized indexes/filters. Skipped
-    (returns False) when the vocabulary exceeds ``max_terms``; per-term
-    lazy probes with parquet term-pushdown remain the scale path."""
-    if index.terms.count() > max_terms:
-        return False
-    tcache: dict = {}
-    for r in index.terms.select("pk", "term", "idf", "df").collect():
-        _add_term_meta(tcache.setdefault(r["term"], {}), r)
+# sys.getsizeof of the entry slot in one of QueryCache's dicts: at most 60
+# amortized on CPython 3.11 for any key type (dicts grown key by key).
+_SLOT = 64
+_ARRAY_HEAD = sys.getsizeof(np.empty(0))  # an ndarray's header, data aside
+# a str's sys.getsizeof beyond ""'s, with at most 4 bytes a char
+_STR_WIDE = sys.getsizeof("\U0001f600") - 4 - sys.getsizeof("")
 
-    do_blobs = False
-    if preload_blobs:
-        total = index.packed.agg(
-            F.sum(F.length("data")).alias("b")
-        ).first()["b"]
-        do_blobs = total is not None and int(total) <= max_blob_bytes
-    cols = ["pk", "term", "shard", "n", "block_last", "block_max", "block_off"]
-    if do_blobs:
-        cols.append("data")
-    scache: dict = {}
-    rcache: dict = {}
+
+def _nbytes(obj) -> int:
+    """Resident bytes of a cache key or value by sys.getsizeof: containers
+    with their items (dict keys included), an ndarray as header plus data;
+    an object referenced twice counts twice (exact types, most frequent
+    first: a warm recount visits every entry)."""
+    t = type(obj)
+    if t is tuple or t is list:
+        return sys.getsizeof(obj) + sum(map(_nbytes, obj))
+    if t is dict:
+        return (
+            sys.getsizeof(obj)
+            + sum(map(_nbytes, obj))
+            + sum(map(_nbytes, obj.values()))
+        )
+    if t is np.ndarray:
+        return _ARRAY_HEAD + obj.nbytes
+    return sys.getsizeof(obj)
+
+
+def _entry_bytes(key, value) -> int:
+    """What one entry of a QueryCache dict keeps resident."""
+    return _SLOT + _nbytes(key) + _nbytes(value)
+
+
+class QueryCache:
+    """The driver's query state for one index (``query_cache``): ``nbytes``
+    resident bytes (``_entry_bytes``) in all, at most CACHE_BYTES.
+    ``warm_query_caches`` preloads whole levels, complete (a term the
+    dictionary lacks is not in the index) and never evicted: the
+    dictionary (terms, shard metadata, stats), then the blobs. The rest
+    is filled lazily through ``put``; an insert that would pass the budget
+    first drops all of it together, and an entry that still does not fit
+    is served uncached."""
+
+    def __init__(self):
+        self.terms: dict = {}  # term -> {pk: (idf, df)}
+        self.shards: dict = {}  # term -> {pk: [(shard, n, max block_max)]}
+        # None -> {pk: (n_docs, avgdl)} of every pk; pk -> (n_docs, avgdl),
+        # or None for a pk the stats table lacks
+        self.stats: dict = {}
+        self.blobs: dict = {}  # (pk, term, shard) -> _raw_blob tuple
+        self.allowed: dict = {}  # canonical filter -> {pk: sorted doc ids}
+        self.dict_complete = self.blobs_complete = False
+        self.nbytes = self.preloaded = 0
+
+    def put(self, part: str, key, value) -> None:
+        """Cache a lazily-filled entry of ``part`` (one of the dicts above)."""
+        if key in getattr(self, part):
+            return
+        n = _entry_bytes(key, value)
+        if self.nbytes + n > CACHE_BYTES:
+            self.allowed = {}
+            if not self.dict_complete:
+                self.terms, self.shards, self.stats = {}, {}, {}
+            if not self.blobs_complete:
+                self.blobs = {}
+            self.nbytes = self.preloaded
+        if self.nbytes + n <= CACHE_BYTES:
+            getattr(self, part)[key] = value
+            self.nbytes += n
+
+    def recount(self) -> int:
+        """``_entry_bytes`` of every entry, counted afresh."""
+        parts = (self.terms, self.shards, self.stats, self.blobs, self.allowed)
+        return sum(_entry_bytes(k, v) for d in parts for k, v in d.items())
+
+    def warm_blobs(self) -> dict | None:
+        """(pk, term, shard) -> raw blob of EVERY packed row once
+        ``warm_query_caches`` preloaded them, else None."""
+        return self.blobs if self.blobs_complete else None
+
+
+def query_cache(index: BM25Index) -> QueryCache:
+    """The index's query cache (BM25Index.invalidate_caches drops it)."""
+    return index.__dict__.setdefault("_query_cache", QueryCache())
+
+
+def warm_query_caches(index: BM25Index) -> bool:
+    """Replace the index's query cache with a preload, as a search head
+    does at start-up: the term dictionary with shard metadata and stats,
+    then the blobs, each level only when an upper bound of its resident
+    bytes fits CACHE_BYTES. The collects hold their rows on the driver
+    while a level is filed, on top of the bytes counted. On a head warmed
+    with its blobs, ``search_batch`` probes, prunes, decodes and scores
+    in-process with ZERO Spark jobs (``search`` adds the jobs of its
+    ``orderBy("rank")``). Returns False, loading nothing, when the
+    dictionary does not fit: lazy term-pushdown probes are the scale path."""
+    # per packed row, in _entry_bytes: the dictionary level as if the row
+    # held a term and a pk of its own in ``terms`` and in ``shards`` (every
+    # (pk, term) has a packed row), the blob level its blob exactly; the
+    # strings are counted at "" plus 4 bytes a char
+    meta_row = _entry_bytes("", {"": (0.0, 1 << 62)}) + _entry_bytes(
+        "", {"": [(1 << 30, 1 << 62, 0.0)]}
+    )
+    blob_row = _entry_bytes(("", "", 1 << 30), _raw_blob(1 << 62, b"", [], [], []))
+    strs = f"{2 * _STR_WIDE} + 4 * (length(term) + length(pk))"
+    size = index.packed.selectExpr(
+        f"sum({meta_row} + 2 * ({strs})) AS meta",
+        f"sum({blob_row} + {strs} + length(data) + 24 * size(block_last))"
+        " AS blobs",
+    ).first()
+    cache = QueryCache()
+    cache.stats[None] = _stats_map(index, None)
+    meta = _entry_bytes(None, cache.stats[None]) + (size["meta"] or 0)
+    if meta > CACHE_BYTES:
+        return False
+    cache.blobs_complete = meta + (size["blobs"] or 0) <= CACHE_BYTES
+    for r in index.terms.select("pk", "term", "idf", "df").collect():
+        _add_term_meta(cache.terms.setdefault(r["term"], {}), r)
+    cols = ["pk", "term", "shard", "n", _shard_ub()]
+    if cache.blobs_complete:
+        cols += ["data", "block_last", "block_max", "block_off"]
     for r in index.packed.select(*cols).collect():
-        _add_shard_meta(scache.setdefault(r["term"], {}), r)
-        if do_blobs:
+        _add_shard_meta(cache.shards.setdefault(r["term"], {}), r)
+        if cache.blobs_complete:
             key = (r["pk"], r["term"], int(r["shard"]))
-            rcache[key] = _raw_blob(*(r[c] for c in _BLOB_COLS))
-    # wholesale replace — appending onto entries from earlier lazy probes
-    # would duplicate shard meta (and double scores)
-    index.__dict__["_term_meta_cache"] = tcache
-    index.__dict__["_shard_meta_cache"] = scache
-    if do_blobs:
-        index.__dict__["_raw_blob_cache"] = rcache
-        index.__dict__["_blobs_complete"] = True
-    _stats_map(index, None)
-    index.__dict__["_dict_complete"] = True
+            cache.blobs[key] = _raw_blob(*(r[c] for c in _BLOB_COLS))
+    cache.dict_complete = True
+    cache.nbytes = cache.preloaded = cache.recount()
+    index.__dict__["_query_cache"] = cache
     return True
+
+
+def _stats_map(index: BM25Index, partition_keys) -> dict:
+    """pk -> (n_docs, avgdl) of the ``partition_keys`` the stats table has
+    (every pk when None), cached: the whole table as one entry, or the
+    given pks collected with pk pushed down, one entry each."""
+    cache = query_cache(index)
+    got = cache.stats.get(None)
+    if got is not None:
+        return got
+    if partition_keys is None:
+        got = {r["pk"]: (r["n_docs"], r["avgdl"]) for r in index.stats.collect()}
+        cache.put("stats", None, got)
+        return got
+    got = {k: cache.stats[k] for k in partition_keys if k in cache.stats}
+    missing = [k for k in partition_keys if k not in got]
+    if missing:
+        got.update(dict.fromkeys(missing))
+        for r in index.stats.filter(F.col("pk").isin(missing)).collect():
+            got[r["pk"]] = (r["n_docs"], r["avgdl"])
+        for k in missing:
+            cache.put("stats", k, got[k])
+    return {k: st for k, st in got.items() if st is not None}
 
 
 def _add_term_meta(by_pk: dict, r) -> None:
     by_pk[r["pk"]] = (float(r["idf"]), int(r["df"]))
 
 
+def _shard_ub() -> Column:
+    """A packed row's max block_max, computed where the row is read."""
+    return F.array_max("block_max").alias("ub")
+
+
 def _add_shard_meta(by_pk: dict, r) -> None:
     by_pk.setdefault(r["pk"], []).append(
-        (int(r["shard"]), int(r["n"]), float(max(r["block_max"])))
+        (int(r["shard"]), int(r["n"]), float(r["ub"]))
     )
 
 
-def _probed(index, attr, table, cols, add, terms_needed, partition_keys):
-    """{(pk, term): value} for ``terms_needed`` within ``partition_keys``,
-    from the term -> {pk: value} cache ``index.<attr>``; the terms it
-    lacks are probed with ONE ``term IN (...)`` scan of ``table`` (none
-    once the dictionary is complete), each row filed by ``add``."""
-    cache = index.__dict__.setdefault(attr, {})
-    missing = [t for t in terms_needed if t not in cache]
-    for t in missing:
-        cache[t] = {}
-    if missing and not index.__dict__.get("_dict_complete"):
+def _probed(index, part, table, cols, add, terms_needed, partition_keys):
+    """{(pk, term): value} for ``terms_needed`` within ``partition_keys``
+    from the cache's term -> {pk: value} ``part``; what it lacks is probed
+    with ONE ``term IN (...)`` scan of ``table`` (none once the dictionary
+    is complete), rows filed by ``add``, a term not found cached empty."""
+    cache = query_cache(index)
+    have = getattr(cache, part)
+    got = {t: have[t] for t in terms_needed if t in have}
+    missing = [t for t in terms_needed if t not in got]
+    if missing and not cache.dict_complete:
+        probed = {t: {} for t in missing}
         rows = table.filter(_in_list("term", missing)).select("pk", "term", *cols)
         for r in rows.collect():
-            add(cache[r["term"]], r)
+            add(probed[r["term"]], r)
+        for t, by_pk in probed.items():
+            cache.put(part, t, by_pk)
+        got.update(probed)
     return {
         (pk, t): v
         for t in terms_needed
-        for pk, v in cache[t].items()
+        for pk, v in got.get(t, {}).items()
         if partition_keys is None or pk in partition_keys
     }
 
 
 def _term_meta(index: BM25Index, terms_needed, partition_keys):
-    """(pk, term) -> (idf, df) via the term dictionary, cached on the index
-    (the driver-side analog of the reference's dictionary probe,
-    bm25.dart:637)."""
+    """(pk, term) -> (idf, df): the reference's dictionary probe
+    (bm25.dart:637), cached."""
     return _probed(
-        index, "_term_meta_cache", index.terms, ("idf", "df"),
+        index, "terms", index.terms, ("idf", "df"),
         _add_term_meta, terms_needed, partition_keys,
     )
 
 
 def _shard_meta(index: BM25Index, terms_needed, partition_keys):
-    """(pk, term) -> list of (shard, n, ub_partial) where ub_partial =
-    max block_max over the shard. Cached; blobs are NOT fetched here."""
+    """(pk, term) -> [(shard, n, max block_max over the shard)], cached."""
     return _probed(
-        index, "_shard_meta_cache", index.packed, ("shard", "n", "block_max"),
+        index, "shards", index.packed, ("shard", "n", _shard_ub()),
         _add_shard_meta, terms_needed, partition_keys,
     )
 
@@ -246,18 +359,13 @@ def _raw_blob(n, data, block_last, block_max, block_off) -> tuple:
     )
 
 
-def _fetch_raw_blobs(index: BM25Index, wanted: set[tuple[str, str, int]]) -> None:
-    """Fetch packed blobs (raw bytes) for the given (pk, term, shard) keys
-    into the driver cache — ONE Spark collect for all of them (the scan is
-    pruned by the term IN (...) predicate: parquet min-max + dictionary).
-    Decoding happens in ``score_shard``, so block-max pruning skips the
-    decode cost of blocks it rules out."""
-    cache = index.__dict__.setdefault("_raw_blob_cache", {})
-    if not index.__dict__.get("_blobs_complete") and len(cache) > 65536:
-        # bound driver memory for lazily-fetched blobs; refetch is cheap.
-        # A complete preload (warm_query_caches) is size-gated instead.
-        cache.clear()
-    missing = [k for k in wanted if k not in cache]
+def _fetch_raw_blobs(index: BM25Index, wanted: set[tuple[str, str, int]]) -> dict:
+    """(pk, term, shard) -> raw blob for the ``wanted`` keys, from the
+    cache; the ones it lacks are fetched with ONE pruned Spark collect and
+    cached. ``score_shard`` decodes only the blocks pruning keeps."""
+    cache = query_cache(index)
+    got = {k: cache.blobs[k] for k in wanted if k in cache.blobs}
+    missing = [k for k in wanted if k not in got]
     if missing:
         terms_m = sorted({t for _, t, _ in missing})
         pks_m = sorted({p for p, _, _ in missing})
@@ -277,7 +385,9 @@ def _fetch_raw_blobs(index: BM25Index, wanted: set[tuple[str, str, int]]) -> Non
         )
         for r in rows:
             key = (r["pk"], r["term"], int(r["shard"]))
-            cache[key] = _raw_blob(*(r[c] for c in _BLOB_COLS))
+            got[key] = _raw_blob(*(r[c] for c in _BLOB_COLS))
+            cache.put("blobs", key, got[key])
+    return got
 
 
 def _in_sorted(allow: np.ndarray, ids: np.ndarray) -> np.ndarray:
@@ -514,10 +624,10 @@ def _driver_topk(
     # Blobs are fetched LAZILY in shard-upper-bound order (geometric waves
     # inside the per-pk loop below): once theta rules a shard out, its blob
     # is never collected at all — fetch bytes track the WAND frontier, not
-    # Σ df. Warmed indexes (_blobs_complete) skip fetching entirely; blobs
-    # shared across the batch's queries are fetched once (_raw_blob_cache).
-    blobs_complete = bool(index.__dict__.get("_blobs_complete"))
-    cache = index.__dict__.setdefault("_raw_blob_cache", {})
+    # Σ df. A head warmed with its blobs skips fetching entirely; blobs
+    # shared across the batch's queries are fetched once.
+    warm = query_cache(index).warm_blobs()
+    blobs = {} if warm is None else warm
     k_eff = per_partition_limit or limit
 
     results: list[tuple] = []
@@ -565,7 +675,7 @@ def _driver_topk(
                     and shard_ub[shard] < top_buf[-1]
                 ):
                     break
-                if not blobs_complete and si >= fetch_hi:
+                if warm is None and si >= fetch_hi:
                     # geometric fetch wave in ub-descending order: the
                     # first wave covers enough shards to plausibly fill
                     # the heap, later waves double — O(log #shards) jobs
@@ -575,17 +685,17 @@ def _driver_topk(
                         (pk, t, s)
                         for s in order[fetch_hi:hi]
                         for t, _ in shard_terms[s]
-                    }
-                    if any(k not in cache for k in want):
-                        _fetch_raw_blobs(index, want)
+                    } - blobs.keys()
+                    if want:
+                        blobs.update(_fetch_raw_blobs(index, want))
                     fetch_hi = hi
                 terms = [
                     (w, (pk, t, shard))
                     for t, w in shard_terms[shard]
-                    if (pk, t, shard) in cache
+                    if (pk, t, shard) in blobs
                 ]
                 _, ids, scores = score_shard(
-                    [terms], cache, shard * index.shard_size, st[1],
+                    [terms], blobs, shard * index.shard_size, st[1],
                     index.k1, index.b, k_eff, mask, top_buf, prune,
                 )
                 ids = np.concatenate((ids_k, ids))
@@ -716,9 +826,7 @@ def _cluster_scored(
     tmeta = _term_meta(index, needed, partition_keys)
     smap = _stats_map(index, partition_keys)
     idf_map = {key: meta[0] for key, meta in tmeta.items()}
-    avgdl_map = {
-        pk_: float(st[1]) for pk_, st in smap.items() if st is not None
-    }
+    avgdl_map = {pk_: float(st[1]) for pk_, st in smap.items()}
 
     by_query: dict[int, list[tuple[str, int]]] = {}
     for qid, term, qtf in qrows:
@@ -737,8 +845,7 @@ def _cluster_scored(
     n_groups = sum(
         -(-int(st[0]) // shard_size)
         for pk_, st in smap.items()
-        if st is not None
-        and (partition_keys is None or pk_ in partition_keys)
+        if partition_keys is None or pk_ in partition_keys
     ) or 1
     target = spark.sparkContext.defaultParallelism
     n_buckets = min(len(qids), max(1, -(-target // n_groups)))
@@ -925,10 +1032,9 @@ def search_packed(
                     for k, v in flt.items()
                 )
             )
-            acache = index.__dict__.setdefault("_allowed_cache", {})
-            if fkey in acache:
-                allowed_by_pk = acache[fkey]
-            else:
+            cache = query_cache(index)
+            allowed_by_pk = cache.allowed.get(fkey)
+            if allowed_by_pk is None:
                 apdf = allowed.limit(DRIVER_PATH_MAX_ALLOWED + 1).toPandas()
                 if len(apdf) > DRIVER_PATH_MAX_ALLOWED:
                     driver_ok = False
@@ -937,9 +1043,7 @@ def search_packed(
                         pk: np.sort(g["doc_id"].to_numpy(np.int64))
                         for pk, g in apdf.groupby("pk", sort=False)
                     }
-                    if len(acache) > 64:
-                        acache.clear()
-                    acache[fkey] = allowed_by_pk
+                    cache.put("allowed", fkey, allowed_by_pk)
             if driver_ok and not allowed_by_pk:
                 return empty_result(spark)
         if driver_ok:

@@ -5,7 +5,7 @@ batch kernel (``packed.score_shard``); ``packed.search_packed``
 picks where that kernel runs — in-process on the driver for interactive
 queries, inside a grouped ``applyInPandas`` for big batches and filters.
 This module holds the public entry points plus the pieces both routes
-share: the result schema, the filter predicate and the per-pk stats.
+share: the result schema and the filter predicate.
 
 The score is the exact reference formula (lib/src/bm25.dart:646-649):
 idf * tf*(k1+1)/(tf + k1*((1-b)+b*dl/avgdl)), with query-term multiplicity
@@ -55,25 +55,6 @@ def empty_result(spark) -> DataFrame:
     createDataFrame([], schema) parallelize path. All-stopword, unknown-term
     and empty-filter queries return through here (bm25.dart:220,600,628)."""
     return spark.sql(_EMPTY_RESULT_SQL)
-
-
-def _stats_map(index: BM25Index, partition_keys) -> dict:
-    """pk -> (n_docs, avgdl), collected once per index and cached."""
-    cache = index.__dict__.setdefault("_stats_cache", {})
-    if index.__dict__.get("_stats_all"):
-        return cache
-    if partition_keys is None:
-        for r in index.stats.collect():
-            cache[r["pk"]] = (r["n_docs"], r["avgdl"])
-        index.__dict__["_stats_all"] = True
-    else:
-        missing = [k for k in partition_keys if k not in cache]
-        if missing:
-            for r in index.stats.filter(F.col("pk").isin(missing)).collect():
-                cache[r["pk"]] = (r["n_docs"], r["avgdl"])
-            for k in missing:  # unknown partitions stay absent, marked seen
-                cache.setdefault(k, None)
-    return cache
 
 
 def _filter_predicate(index: BM25Index, flt: dict) -> F.Column:

@@ -48,6 +48,17 @@ def _balanced(terms: list[str]) -> str:
     return f"({_balanced(terms[:mid])} + {_balanced(terms[mid:])})"
 
 
+def lang_norm_sql(max_chars: int = LANG_MAX_CHARS, flags: str = "") -> str:
+    """LID's normalized ``text`` in SQL both engines parse (DuckDB with
+    ``flags=", 'g'"``). U+0130 folds to 'i' BEFORE lower(): the JVM gives
+    'i' + a combining dot, which the letter class turns into a word break
+    ('İzmir' -> ' i zmir '), while DuckDB gives 'i'."""
+    return (
+        f"concat(' ', regexp_replace(lower(replace(substr(text, 1, "
+        f"{max_chars}), '\u0130', 'i')), '{LANG_NORM_CLASS}', ' '{flags}), ' ')"
+    )
+
+
 def lid_score_sql(lang: str, intdiv: str = "div", squote: str = "\\'") -> str:
     """The ONE generator for a language's LID score expression, shared by
     the Spark operator (``F.expr``, Spark SQL ``div``, backslash quote
@@ -150,16 +161,9 @@ def lang_id(
     group by pattern length so each division is exact (every length-diff
     is a multiple of its pattern length). Tie-break: earliest language in
     LANG_ORDER (same CASE order as the DuckDB oracle)."""
-    norm = F.concat(
-        F.lit(" "),
-        F.regexp_replace(
-            F.lower(F.substring(F.col(text_col), 1, max_chars)),
-            LANG_NORM_CLASS,
-            " ",
-        ),
-        F.lit(" "),
+    d = docs.select("doc_id", F.col(text_col).alias("text")).select(
+        "doc_id", F.expr(lang_norm_sql(max_chars)).alias("s")
     )
-    d = docs.select("doc_id", norm.alias("s"))
 
     score_cols = [
         F.expr(lid_score_sql(lang)).alias(f"s_{lang}")

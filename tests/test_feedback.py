@@ -62,10 +62,12 @@ def test_feedback_empty_ids_is_plain_search(engine):
 
 
 def test_feedback_warm_head_zero_jobs_and_identical(engine):
-    """On a fully-warmed packed head, a feedback query runs end-to-end
-    with ZERO Spark jobs (relevant-doc term counts reconstructed from the
-    RAM-resident postings blocks, expanded query served by the driver
-    scorer) and returns exactly the cold path's results."""
+    """On a fully-warmed packed head, building a feedback query's result
+    DataFrame launches ZERO Spark jobs (relevant-doc term counts
+    reconstructed from the RAM-resident postings blocks, expanded query
+    served by the driver scorer), and its rows are exactly the cold
+    path's. Jobs are counted only while the DataFrame is built, not at
+    collect, where ``search``'s ``orderBy("rank")`` runs its jobs."""
     from bm25_spark.functions.analyzer import tokenize_text
     from bm25_spark.operators.packed import warm_query_caches
 

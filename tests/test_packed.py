@@ -2,6 +2,7 @@
 must be rank- and score-identical to the oracle on both the driver and the
 cluster path, and the two paths bit-identical to each other."""
 
+import dataclasses
 import re
 
 import numpy as np
@@ -453,6 +454,70 @@ def test_warm_caches_identical_results(packed_synth):
     assert before == after
     # unknown terms resolve to empty WITHOUT a dictionary probe
     assert search_packed(packed_synth, [(0, "zz_unknown_term")], limit=5).count() == 0
+
+
+def test_warm_head_unknown_terms_do_not_grow_cache(packed_synth):
+    """A complete dictionary answers "not in the index" itself: distinct
+    unknown-term queries, alone or beside a known term, leave a warmed
+    head's dictionary entries and cache bytes unchanged."""
+    from bm25_spark.operators import packed as packed_mod
+
+    head = dataclasses.replace(packed_synth)
+    assert packed_mod.warm_query_caches(head) is True
+    cache = packed_mod.query_cache(head)
+    before = (len(cache.terms), len(cache.shards), cache.nbytes)
+    assert cache.nbytes == cache.recount()
+    for i in range(40):
+        q = f"zzq{i} qx{i}" if i % 2 else f"spark zzq{i}"
+        search_packed(head, [(0, q)], limit=5).collect()
+    assert (len(cache.terms), len(cache.shards), cache.nbytes) == before
+
+
+def test_long_session_cache_bounded_and_exact(packed_synth, synth_oracle, monkeypatch):
+    """A lazily probed head (never warmed) under a budget of a few KB
+    serves 200+ distinct hot and filtered queries. After every query the
+    cache holds at most the budget and exactly the recount of its entries,
+    and every answer equals a freshly opened index's and the oracle's."""
+    from bm25_spark.operators import packed as packed_mod
+
+    budget = 12 << 10
+    monkeypatch.setattr(packed_mod, "CACHE_BYTES", budget)
+    hot = sorted(synth_oracle.idf, key=lambda t: synth_oracle.idf[t])[:20]
+    texts = [f"{a} {b}" for i, a in enumerate(hot) for b in hot[i + 1 :]]
+    texts += [f"{t} zzq{i}" for i, t in enumerate(hot)]
+    filters = [None, {"role": ["user"]}, {"role": "assistant"},
+               {"role": ["system", "tool"]}, {"tool": ["search", "code"]}]
+    session = [(q, filters[i % len(filters)]) for i, q in enumerate(texts)]
+    assert len(set((q, repr(f)) for q, f in session)) == len(session) >= 200
+
+    head = dataclasses.replace(packed_synth)
+    got, shrank, prev, fullest = [], 0, 0, 0
+    for q, flt in session:
+        res = search_packed(head, [(0, q)], limit=5, flt=flt)
+        got.append(sorted((r["rank"], r["doc_id"], r["score"]) for r in res.collect()))
+        cache = packed_mod.query_cache(head)
+        assert cache.nbytes <= budget, q
+        assert cache.nbytes == cache.recount(), q
+        shrank += cache.nbytes < prev
+        fullest = max(fullest, cache.nbytes)
+        prev = cache.nbytes
+    assert shrank > 0, "the budget never evicted: it tests nothing"
+    assert fullest > budget // 2, "the cache never filled: it tests nothing"
+
+    fresh = {}
+    for flt in filters:
+        batch = [(i, q) for i, (q, f) in enumerate(session) if f is flt]
+        res = search_packed(dataclasses.replace(packed_synth), batch, limit=5, flt=flt)
+        for r in res.collect():
+            fresh.setdefault(r["query_id"], []).append(
+                (r["rank"], r["doc_id"], r["score"])
+            )
+    for i, (q, flt) in enumerate(session):
+        assert got[i] == sorted(fresh.get(i, [])), (q, flt)
+        want = synth_oracle.search(q, limit=5, flt=flt)
+        assert [d for _, d, _ in got[i]] == [d for d, _ in want], (q, flt)
+        for (_, _, gs), (_, ws) in zip(got[i], want):
+            assert abs(gs - ws) < 1e-9, (q, flt)
 
 
 def test_chunked_partial_pack_identical(spark, packed_synth):

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from bm25_spark.operators.docids import assign_doc_ids
 from bm25_spark.operators.indexer import build_index
+from bm25_spark.operators.packed import query_cache
 from bm25_spark.operators import searcher
 from bm25_spark.oracle import OracleBM25, OraclePartitionedBM25
 from bm25_spark.sources.datagen import (
@@ -240,6 +241,11 @@ def test_partitioned_index(spark, synth):
                 assert abs(gs - ws) < 1e-9, (key, gd, wd)
         # unknown partition -> empty
         assert searcher.search_in(idx, "zzz", "spark").count() == 0
+        # each partitioned query collected (pk pushed down) and cached
+        # only its own pks' stats; the unknown pk is cached as absent
+        stats = query_cache(idx).stats
+        assert set(stats) == {"user", "assistant", "zzz"}
+        assert stats["zzz"] is None
         # searchMany quirk: per-partition cap 10 before global merge
         want = oracle.search_many(["user", "assistant"], "spark data", limit=15)
         got = searcher.search_many(idx, ["user", "assistant"], "spark data", limit=15)

@@ -108,6 +108,42 @@ def test_lang_id_trigram_accuracy(spark):
     assert not wrong, wrong
 
 
+TURKISH_MIXED_CASE = [
+    (0, "BİR GÜN İSTANBUL'DA İzmir"),
+    (1, "İstanbul ve İzmir için bir gün"),
+    (2, "KIŞ GELİYOR, İNSANLAR EVLERİNE DÖNÜYOR"),
+    (3, "Bir İşçi için büyük bir gün"),
+]
+
+
+def test_lang_id_turkish_dotted_i_matches_duckdb(spark):
+    """U+0130 folds to 'i' in both engines: Spark's JVM lower() alone
+    would give 'i' + a combining dot that the letter class turns into a
+    word break ('bi r', 'i zmir'), while DuckDB's lower() gives 'i'."""
+    duckdb = pytest.importorskip("duckdb")
+    import pandas as pd
+
+    from bm25_spark.contract import oracle_sql
+
+    df = spark.createDataFrame(TURKISH_MIXED_CASE, "doc_id long, text string")
+    con = duckdb.connect()
+    con.register(
+        "documents", pd.DataFrame(TURKISH_MIXED_CASE, columns=["doc_id", "text"])
+    )
+    norm = F.expr(textstats.lang_norm_sql()).alias("s")
+    spark_norm = {r["doc_id"]: r["s"] for r in df.select("doc_id", norm).collect()}
+    duck_norm_sql = textstats.lang_norm_sql(flags=", 'g'")
+    duck_norm = dict(
+        con.sql(f"SELECT doc_id, {duck_norm_sql} FROM documents").fetchall()
+    )
+    assert spark_norm == duck_norm
+    assert spark_norm[0] == " bir gün istanbul da izmir "
+    spark_pred = {r["doc_id"]: r["lang_pred"] for r in textstats.lang_id(df).collect()}
+    duck_pred = dict(con.sql(oracle_sql()["ts_lang_id"]).fetchall())
+    assert spark_pred == duck_pred
+    assert set(spark_pred.values()) == {"tr"}
+
+
 def test_repetition_stats(spark):
     """Gopher-style repetition filters: duplicate-line fraction (exact
     array math, no explode) and top-bigram token coverage (explode +
