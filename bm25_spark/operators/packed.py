@@ -38,13 +38,15 @@ Two physical strategies, chosen per query:
    fewer shard groups than the cluster has slots, the query side is split
    into a bounded number of buckets (blob replication = min(buckets,
    queries-that-use-the-term), chosen at plan time — never Q). Per-shard
-   top-k merges globally. Each (pk, shard, bucket) group gets its own
-   scoring partition (an explicit-count repartition that AQE cannot
-   coalesce: the blob shuffle is small, the Python scoring behind it is
-   not) and makes ONE kernel call for all the bucket's queries: each
-   block decoded once, shared by every query using its term. Metadata
-   filters become a doc-id mask INSIDE the kernel (reference semantics:
-   filtered docs skipped during traversal, bm25.dart:644).
+   top-k merges globally. The (pk, shard, bucket) groups are dealt
+   round-robin to at most one Python task per core (an explicit-count
+   partitioning that AQE cannot coalesce: the blob shuffle is small, the
+   Python scoring behind it is not, and each Python task pays a fixed
+   start-up cost), and each group makes ONE kernel call for all the
+   bucket's queries: each block decoded once, shared by every query
+   using its term. Metadata filters become a doc-id mask INSIDE the
+   kernel (reference semantics: filtered docs skipped during traversal,
+   bm25.dart:644).
 
 Every term probe (dictionary, shard metadata, blob fetch, cluster scan) is
 one parsed ``term IN (...)`` predicate (``_in_list``): plan building costs
@@ -799,16 +801,27 @@ def _cluster_scored(
     1000 queries in one kernel call per shard: each block varint-decoded
     once, shared by every query using its term.
 
-    Task shape: the joined blob rows are repartitioned by (pk, shard,
-    bucket) into n_groups x n_buckets partitions — one scoring partition
-    per group — and the groupBy reuses that partitioning (one Exchange).
-    The scorer is CPU-bound Python whose cost shuffle bytes do not
-    predict: left to size the exchange by bytes, AQE coalesces the
-    compressed blobs (a few hundred KB for a 400-query batch) into ONE
-    task that scores every (query, shard) pair serially. The explicit
-    count keeps one task per group (``indexer._merge_runs_exchange``
-    guards its merge the same way), and each group is one ``score_shard``
-    call."""
+    Task shape: ONE wave of n_tasks = min(default parallelism, n_groups x
+    n_buckets) Python tasks. Each (pk, shard, bucket) group is dealt a
+    task id round-robin over a plan-time grid, and the joined blob rows go
+    straight to their task's partition (``repartitionById``: one
+    Exchange, which the per-group ``groupBy`` reuses; Spark still calls
+    the scorer once per group, so a worker holds one group's rows at a
+    time). Every Python task pays a fixed worker start-up, several times
+    one group's ``score_shard`` call (BENCH_NOTES.md "Python task
+    floor"), so tasks beyond the core count only add waves. The grid is
+    pk-major, so each pk's shards go round-robin to the tasks; the deal
+    counts groups, not work. On a whole single-pk index, or a whole one
+    whose pks interleave over densely numbered doc ids, every task gets
+    floor or ceil of groups / n_tasks, and the groups are near-equal
+    (shards are equal doc ranges, a hot term is split across all of
+    them). Pks on contiguous doc ranges (a conv_id partition) make many
+    groups of unequal size. For a ``partition_keys`` subset or sparse
+    user doc ids (``id_col``) the grid width is a guess: each pk's shards
+    still go round-robin, but the floor-or-ceil count may slip.
+    The explicit count also keeps AQE from coalescing the compressed
+    blobs (a few hundred KB for a 400-query batch) into ONE serial task
+    (``indexer._merge_runs_exchange`` guards its merge the same way)."""
     shard_size = index.shard_size
     k1, b = index.k1, index.b
     spark = index.spark
@@ -842,13 +855,13 @@ def _cluster_scored(
     # the number of queries using the term — the worst case equals the old
     # per-query grouping, the big-index case (n_buckets=1) ships each blob
     # once.
-    n_groups = sum(
-        -(-int(st[0]) // shard_size)
-        for pk_, st in smap.items()
-        if partition_keys is None or pk_ in partition_keys
-    ) or 1
+    pks = sorted(
+        pk_ for pk_ in smap if partition_keys is None or pk_ in partition_keys
+    )
+    n_groups = sum(-(-int(smap[pk_][0]) // shard_size) for pk_ in pks) or 1
     target = spark.sparkContext.defaultParallelism
     n_buckets = min(len(qids), max(1, -(-target // n_groups)))
+    n_tasks = min(target, n_groups * n_buckets)
     bucket_of = {qid: i % n_buckets for i, qid in enumerate(qids)}
     queries_by_bucket: dict[int, list] = {}
     for qid in qids:
@@ -872,9 +885,9 @@ def _cluster_scored(
 
     if stats is not None:
         # opt-in instrumentation (tests / telemetry): plan-time bucket
-        # facts are free; per-(pk, shard, qb) group input row counts cost
-        # one extra agg job over the joined blob rows (groups, not Spark
-        # tasks: hash partitioning may put two groups in one task).
+        # and task facts are free; per-(pk, shard, qb) group input row
+        # counts cost one extra agg job over the joined blob rows (groups,
+        # not Spark tasks: a task scores several groups).
         # Replication per blob = number of buckets whose queries use its
         # term — capped by n_buckets AND by the number of queries
         # containing the term.
@@ -884,6 +897,7 @@ def _cluster_scored(
         stats["n_groups"] = n_groups
         stats["n_buckets"] = n_buckets
         stats["n_queries"] = len(qids)
+        stats["n_score_tasks"] = n_tasks
         stats["max_term_replication"] = max(repl.values(), default=0)
         per_group = (
             rows.groupBy("pk", "shard", "qb")
@@ -931,7 +945,7 @@ def _cluster_scored(
     def score_group(key, pdf):
         """Every query of this bucket against one shard's blobs: ONE
         ``score_shard`` call, decodes shared by all queries using a term."""
-        pk, shard, qb = key[0], int(key[1]), int(key[2])
+        pk, shard, qb = key[1], int(key[2]), int(key[3])
         shard_base = shard * shard_size
         avgdl = avgdl_map.get(pk)  # a pk without stats scores nothing
         queries = queries_by_bucket.get(qb, []) if avgdl is not None else []
@@ -964,9 +978,30 @@ def _cluster_scored(
             {"query_id": qids[slot], "pk": pk, "doc_id": ids, "score": scores}
         )
 
+    # The deal's grid: the pks in sorted order, each as wide as the grid
+    # pks' doc-id space has shards, then the buckets; a group's task is
+    # its grid position mod n_tasks. A pk's offset is one broadcast hash
+    # probe per row.
+    pos = F.col("shard").cast("long") * n_buckets + F.col("qb")
+    if len(pks) > 1:
+        width = -(-sum(int(smap[pk_][0]) for pk_ in pks) // shard_size)
+        offsets = pd.DataFrame(
+            {
+                "pk": pks,
+                "pk_base": np.arange(len(pks), dtype=np.int64) * width * n_buckets,
+            }
+        )
+        rows = rows.join(
+            F.broadcast(spark.createDataFrame(offsets, "pk string, pk_base long")),
+            "pk",
+        )
+        pos = pos + F.col("pk_base")
+    task = F.pmod(pos, F.lit(n_tasks)).cast("int")
     return (
-        rows.repartition(n_groups * n_buckets, "pk", "shard", "qb")
-        .groupBy("pk", "shard", "qb")
+        rows.withColumn("task", task)
+        .drop("pk_base")
+        .repartitionById(n_tasks, "task")
+        .groupBy("task", "pk", "shard", "qb")
         .applyInPandas(score_group, schema=_SCORED_SCHEMA)
     )
 

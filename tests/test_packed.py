@@ -767,9 +767,11 @@ def test_cluster_batch_skew_rows_bounded(spark, tmp_path):
     shipped at most min(n_buckets, queries-using-its-term) times, and one
     group never receives more blob rows than the batch's distinct terms
     (i.e. per-group input is O(terms), independent of Q and N). The
-    scorer must also run as more than one Spark task (AQE must not
-    coalesce the small blob shuffle into one serial Python task) behind a
-    single Exchange, with the term probe pushed into the parquet scan."""
+    scorer must also run as exactly its planned number of Spark tasks
+    (AQE must not coalesce the small blob shuffle into one serial Python
+    task, and no scoring partition may be left empty) behind a single
+    pass-through Exchange, one scorer call per group, with the term
+    probe pushed into the parquet scan."""
     import datetime as dt
 
     t0 = dt.datetime(2026, 1, 1)
@@ -821,14 +823,80 @@ def test_cluster_batch_skew_rows_bounded(spark, tmp_path):
 
     write_index(idx, str(tmp_path / "idx"))
     loaded = read_index(spark, str(tmp_path / "idx"))
+    planned: dict = {}
     scored = packed_mod._cluster_scored(
-        loaded, packed_mod._qrows(loaded, queries, None), None, None, 5
+        loaded, packed_mod._qrows(loaded, queries, None), None, None, 5,
+        stats=planned,
     ).withColumn("part", F.spark_partition_id())
     parts = {r["part"] for r in scored.collect()}
-    assert len(parts) > 1, "the scorer ran as one task"
+    assert planned["n_score_tasks"] > 1
+    assert len(parts) == planned["n_score_tasks"], parts
     plan = scored._jdf.queryExecution().executedPlan().toString()
     plan = plan.split("== Initial Plan ==")[0]  # the final adaptive plan
     below = plan[plan.index("FlatMapGroupsInPandas"):]
-    assert len(re.findall(r"(?<!Broadcast)Exchange ", below)) == 1, plan
+    exchanges = re.findall(r"(?<!Broadcast)Exchange (\w+)", below)
+    assert exchanges == ["shufflepartitionidpassthrough"], plan
+    # one scorer call per (pk, shard, qb) group, not per task
+    assert re.search(
+        r"FlatMapGroupsInPandas \[task#\d+, pk#\d+, shard#\d+, qb#\d+\]", plan
+    ), plan
     assert re.search(r"PushedFilters: \[.*In\(term, ", plan), plan
+    idx.packed.unpersist()
+
+
+def test_cluster_tasks_deal_groups_evenly(spark):
+    """The cluster scorer deals its (pk, shard, bucket) groups round-robin
+    to one task per core: on a role-partitioned index whose pks interleave
+    over every shard, each task scores floor or ceil of G / T groups (no
+    pk's shard 0 piles onto task 0), and the rows equal the driver
+    path's."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from bm25_spark.operators import packed as packed_mod
+    from bm25_spark.sources.datagen import TRANSCRIPT_SCHEMA
+
+    t0 = dt.datetime(2026, 1, 1)
+    roles = ("user", "assistant", "tool")
+    rows = [
+        ("bal", i, roles[i % 3], f"hotterm filler{i % 13} rare{i}", None,
+         t0 + dt.timedelta(seconds=i))
+        for i in range(336)
+    ]
+    df = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
+    shard_size = 16
+    idx = build_index(df, shard_size=shard_size, partition_col="role")
+    idx.packed.persist().count()
+    queries = [(q, f"hotterm rare{q * 5} filler{q % 13}") for q in range(10)]
+
+    stats: dict = {}
+    scored = packed_mod._cluster_scored(
+        idx, packed_mod._qrows(idx, queries, None), None, None, 10,
+        stats=stats,
+    ).withColumn("part", F.spark_partition_id())
+    n_buckets, n_tasks = stats["n_buckets"], stats["n_score_tasks"]
+    assert n_tasks == spark.sparkContext.defaultParallelism
+    # hotterm is in every doc: every (pk, shard, bucket) group scores rows
+    qids = sorted(q for q, _ in queries)
+    qb = {qid: i % n_buckets for i, qid in enumerate(qids)}
+    task_of: dict = {}
+    for r in scored.collect():
+        key = (r["pk"], r["doc_id"] // shard_size, qb[r["query_id"]])
+        assert task_of.setdefault(key, r["part"]) == r["part"], key
+    n_groups = len(task_of)
+    assert n_groups == stats["n_score_groups"] >= 2 * n_tasks
+    per_task = [list(task_of.values()).count(t) for t in range(n_tasks)]
+    fair = {n_groups // n_tasks, -(-n_groups // n_tasks)}
+    assert set(per_task) <= fair, per_task
+
+    def ranked(res):
+        return sorted(
+            (r["query_id"], r["rank"], r["pk"], r["doc_id"], r["score"])
+            for r in res.collect()
+        )
+
+    clu = search_packed(idx, queries, limit=10, force_cluster=True)
+    drv = search_packed(idx, queries, limit=10)
+    assert ranked(clu) == ranked(drv)
     idx.packed.unpersist()

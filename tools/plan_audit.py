@@ -94,17 +94,20 @@ def main() -> int:
             "Cluster batch scorer",
             "The WHOLE query batch scores per (pk, shard) group: packed "
             "blobs cross the shuffle once per plan-time bucket (bounded by "
-            "parallelism), never once per query, into one scoring "
-            "partition per (pk, shard, bucket) group, where ONE "
-            "score_shard call scores all the bucket's queries (each block "
-            "varint-decoded once, one bincount per query chunk). "
-            "Look for: exactly "
-            "one blob-side Exchange hashpartitioning(pk, shard, qb, "
-            "n_groups x n_buckets) marked REPARTITION_BY_NUM (an explicit "
-            "count AQE does not coalesce) directly under the "
-            "FlatMapGroupsInPandas scorer; PushedFilters with "
-            "In(term, ...); the query frame entering via broadcast/local "
-            "relation, not a shuffle.",
+            "parallelism), never once per query; the (pk, shard, bucket) "
+            "groups are dealt round-robin to min(cores, groups) scoring "
+            "tasks, and each group is ONE score_shard call for all the "
+            "bucket's queries (each block varint-decoded once, one "
+            "bincount per query chunk). Look for: exactly one blob-side "
+            "Exchange shufflepartitionidpassthrough("
+            "direct_shuffle_partition_id(task), n_tasks) marked "
+            "REPARTITION_BY_NUM (an explicit count AQE does not coalesce) "
+            "directly under the FlatMapGroupsInPandas scorer, grouped by "
+            "(task, pk, shard, qb) so each group is its own call; the "
+            "task column a pmod(...) of (shard, qb), plus a per-pk offset "
+            "from a broadcast (pk, pk_base) join on a partitioned index; "
+            "PushedFilters with In(term, ...); the query frame entering "
+            "via broadcast/local relation, not a shuffle.",
             captured_explain(res),
         )
     )
