@@ -158,9 +158,10 @@ def _assign_sampled(
         df.schema.fields + [StructField("doc_id", LongType(), False)]
     )
 
-    # pass 2: route each bucket to one task (hash shuffle on _pid keeps
-    # every bucket whole; quantile boundaries keep buckets ~equal), sort
-    # the task's rows by (_pid, keys), emit offset[pid] + local position
+    # pass 2: route bucket p to partition p (repartitionById: hashing P
+    # int ids into P partitions leaves some empty while others take two
+    # buckets; quantile boundaries keep buckets ~equal), sort the task's
+    # rows by (_pid, keys), emit offset[pid] + local position
     def add_ids(iterator):
         cur_pid = -1
         pos = 0
@@ -185,7 +186,7 @@ def _assign_sampled(
             yield pdf
 
     return (
-        withb.repartition(num_partitions, "_pid")
+        withb.repartitionById(num_partitions, "_pid")
         .sortWithinPartitions("_pid", *order_cols)
         .mapInPandas(add_ids, schema=out_schema)
     )

@@ -163,9 +163,8 @@ def search_with_feedback(
     """Rocchio-expanded search. On a head warmed with its blobs (see
     packed.warm_query_caches) the relevant-doc term reconstruction and
     the expansion run driver-side with no Spark job, and the expanded
-    query is a warm ``search`` (whose ``orderBy("rank")`` runs the only
-    jobs); cold indexes pay one doc_id-pushdown filter+collect for the
-    relevant texts."""
+    query is a warm ``search`` (no job either); cold indexes pay one
+    doc_id-pushdown filter+collect for the relevant texts."""
     if not relevant_doc_ids:
         return search(index, query, limit=limit)
     warm = _relevant_term_counts_warm(index, relevant_doc_ids)

@@ -33,10 +33,12 @@ Design notes vs the reference (lib/src/bm25.dart:423-501):
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass, field
 
 import numpy as np
+from py4j.protocol import Py4JError
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -875,15 +877,19 @@ def index_meta(index: BM25Index) -> dict:
     }
 
 
-def _is_local_path(path: str) -> bool:
-    """True for plain local paths and file:// URIs (the fast path); any
-    other scheme (hdfs://, s3a://, ...) routes through the Hadoop
-    FileSystem API — driver-local open()/os.path on those would silently
-    write to the wrong place or read empty."""
+def _local_path(path: str) -> str | None:
+    """The OS path behind a scheme-less path or a file: URI (its path
+    part); None for every other scheme (hdfs://, s3a://, ...), which goes
+    through the Hadoop FileSystem API. These helpers are the only code
+    that touches the state files beside an index's tables (meta.json,
+    checkpoint manifests, ingest offsets): open()/os.path on a URI would
+    write under a cwd-relative ``file:`` folder or read nothing."""
     from urllib.parse import urlparse
 
-    scheme = urlparse(path).scheme
-    return scheme in ("", "file")
+    u = urlparse(path)
+    if u.scheme == "":
+        return path
+    return u.path if u.scheme == "file" else None
 
 
 def _hadoop_fs(path: str):
@@ -899,25 +905,41 @@ def _hadoop_fs(path: str):
 
 
 def _path_is_dir(path: str) -> bool:
-    if _is_local_path(path):
-        return os.path.isdir(path)
+    local = _local_path(path)
+    if local is not None:
+        return os.path.isdir(local)
     _, fs, jpath = _hadoop_fs(path)
     return bool(fs.exists(jpath) and fs.getFileStatus(jpath).isDirectory())
 
 
-def _write_meta(meta: dict, path: str) -> None:
-    import json
+def _list_dir(path: str) -> list[str]:
+    """Sorted entry names of directory ``path``; [] when it is missing."""
+    local = _local_path(path)
+    if local is not None:
+        return sorted(os.listdir(local)) if os.path.isdir(local) else []
+    _, fs, jpath = _hadoop_fs(path)
+    if not fs.exists(jpath):
+        return []
+    return sorted(st.getPath().getName() for st in fs.listStatus(jpath))
 
-    payload = json.dumps(meta, indent=1)
-    if _is_local_path(path):
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
+
+def _write_meta(meta: dict, path: str, indent: int | None = 1) -> None:
+    """Write a JSON record, creating its parent directory, through
+    ``path + ".tmp"``: locally os.replace commits it in one step; on the
+    Hadoop branch the old record is deleted before the rename, and
+    read_meta falls back to the complete .tmp if a crash lands between
+    the two."""
+    payload = json.dumps(meta, indent=indent)
+    local = _local_path(path)
+    if local is not None:
+        os.makedirs(os.path.dirname(local) or ".", exist_ok=True)
+        with open(local + ".tmp", "w") as f:
             f.write(payload)
-        os.replace(tmp, path)
+        os.replace(local + ".tmp", local)
         return
     jvm, fs, jpath = _hadoop_fs(path)
     jtmp = jvm.org.apache.hadoop.fs.Path(path + ".tmp")
-    out = fs.create(jtmp, True)
+    out = fs.create(jtmp, True)  # creates missing parent directories
     try:
         out.write(bytearray(payload.encode("utf-8")))
     finally:
@@ -929,24 +951,26 @@ def _write_meta(meta: dict, path: str) -> None:
 
 
 def read_meta(path: str) -> dict | None:
-    import json
-
-    if _is_local_path(path):
+    """The JSON record _write_meta left at ``path`` (or, when the record
+    is missing, at ``path + ".tmp"``); None when neither exists or the
+    record does not parse."""
+    for p in (path, path + ".tmp"):
+        local = _local_path(p)
         try:
-            with open(path) as f:
-                return json.load(f)
-        except (OSError, json.JSONDecodeError):
+            if local is None:
+                jvm, fs, jpath = _hadoop_fs(p)
+                if fs.exists(jpath):
+                    baos = jvm.java.io.ByteArrayOutputStream()
+                    jvm.org.apache.hadoop.io.IOUtils.copyBytes(
+                        fs.open(jpath), baos, 4096, True
+                    )
+                    return json.loads(bytes(baos.toByteArray()).decode("utf-8"))
+            elif os.path.exists(local):
+                with open(local) as f:
+                    return json.load(f)
+        except (OSError, ValueError, Py4JError):
             return None
-    try:
-        jvm, fs, jpath = _hadoop_fs(path)
-        if not fs.exists(jpath):
-            return None
-        stream = fs.open(jpath)
-        baos = jvm.java.io.ByteArrayOutputStream()
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 4096, True)
-        return json.loads(bytes(baos.toByteArray()).decode("utf-8"))
-    except Exception:
-        return None
+    return None
 
 
 def write_index(
@@ -984,8 +1008,6 @@ def write_index(
         wr.save(f"{root}/{name}")
 
     _write_tables(index, save)
-    if _is_local_path(root):
-        os.makedirs(root, exist_ok=True)
     meta = index_meta(index)
     meta["storage_format"] = storage_format
     _write_meta(meta, f"{root}/meta.json")
@@ -1015,11 +1037,10 @@ def _index_from_tables(
     shard_size: int | None = None,
     **params,
 ) -> BM25Index:
-    """The one reader rule behind read_index, read_index_tables and
-    plans.checkpoint.read_checkpointed_index: ``rd(table)`` loads one
-    index table; parameters come from ``params`` (explicit caller
-    arguments, None = unset), else from ``meta`` (the write-side truth),
-    else from the defaults.
+    """The one reader rule behind read_index and read_index_tables:
+    ``rd(table)`` loads one index table; parameters come from ``params``
+    (explicit caller arguments, None = unset), else from ``meta`` (the
+    write-side truth), else from the defaults.
 
     Two checks: the postings table must be the packed layout with block
     offsets (the only form the scorers read), and ``shard_size`` is never
@@ -1079,7 +1100,8 @@ def read_index(
     doc_ids (see _index_from_tables). ``storage_format`` likewise defaults
     from meta.json (an index written as Iceberg must not be read as raw
     parquet — the file layout under an Iceberg table dir is not a plain
-    parquet dataset)."""
+    parquet dataset). A plans.checkpoint.checkpointed_build root reads the
+    same way: its pk=<value> table directories are hive partitions."""
     meta = read_meta(f"{root}/meta.json") or {}
     if storage_format is None:
         storage_format = meta.get("storage_format", "parquet")
@@ -1127,7 +1149,6 @@ def write_index_tables(
     lives in the catalog with no filesystem side-channel. Tables are
     written through _write_tables (pinning and order as in write_index),
     the ``_meta`` table last."""
-    import json
 
     def save(name: str, df: DataFrame) -> None:
         wr = df.write.mode(mode).format(storage_format)
@@ -1152,8 +1173,6 @@ def read_index_tables(
     from the ``<prefix>_meta`` table (the write-side truth); ``shard_size``
     may be overridden explicitly (decode-critical, same contract as
     read_index)."""
-    import json
-
     meta_rows = spark.table(f"{prefix}_meta").collect()
     if len(meta_rows) != 1:
         raise ValueError(

@@ -227,8 +227,8 @@ def warm_query_caches(index: BM25Index) -> bool:
     bytes fits CACHE_BYTES. The collects hold their rows on the driver
     while a level is filed, on top of the bytes counted. On a head warmed
     with its blobs, ``search_batch`` probes, prunes, decodes and scores
-    in-process with ZERO Spark jobs (``search`` adds the jobs of its
-    ``orderBy("rank")``). Returns False, loading nothing, when the
+    in-process with ZERO Spark jobs, and so do ``search``, ``search_in``
+    and ``search_many``. Returns False, loading nothing, when the
     dictionary does not fit: lazy term-pushdown probes are the scale path."""
     # per packed row, in _entry_bytes: the dictionary level as if the row
     # held a term and a pk of its own in ``terms`` and in ``shards`` (every
@@ -1023,7 +1023,8 @@ def search_packed(
     path or the cluster path automatically; ``prune=False`` turns off the
     shard- and block-level pruning on the driver path (reference mode).
     ``cluster_stats``: pass a dict to capture the cluster path's shuffle
-    shape (bucket counts, per-group input rows — one extra agg job)."""
+    shape (bucket counts, per-group input rows — one extra agg job).
+    ``collect()`` returns each query's rows together, in rank order."""
     if limit < 1:
         raise ValueError("limit must be >= 1")
     spark = index.spark
@@ -1106,8 +1107,12 @@ def search_packed(
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
+    # a local sort, no Exchange: every row of a query shares the window's
+    # partition, so collect() returns each query's rows together in rank
+    # order, as the driver path's VALUES rows already come
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= limit)
         .select("query_id", "pk", "doc_id", "score", "rank")
+        .sortWithinPartitions("query_id", "rank")
     )

@@ -115,16 +115,17 @@ def search(
     flt: dict | None = None,
     stopwords=None,
 ) -> DataFrame:
-    """Single-query convenience — (doc_id, score, rank), rank ascending."""
+    """Single-query convenience — (doc_id, score, rank); ``collect()``
+    returns rank order (search_packed), with no sort job."""
     res = search_batch(index, [(0, query)], limit=limit, flt=flt, stopwords=stopwords)
-    return res.select("doc_id", "score", "rank").orderBy("rank")
+    return res.select("doc_id", "score", "rank")
 
 
 def search_in(index: BM25Index, key: str, query: str, limit: int = 10) -> DataFrame:
     """Partition-scoped search (partitioned_bm25.dart:104-109); unknown key
     naturally yields zero rows."""
     res = search_batch(index, [(0, query)], limit=limit, partition_keys=[key])
-    return res.select("doc_id", "score", "rank").orderBy("rank")
+    return res.select("doc_id", "score", "rank")
 
 
 def search_many(
@@ -140,7 +141,7 @@ def search_many(
         partition_keys=keys,
         per_partition_limit=10,
     )
-    return res.select("pk", "doc_id", "score", "rank").orderBy("rank")
+    return res.select("pk", "doc_id", "score", "rank")
 
 
 def fetch_results(result_df: DataFrame, index: BM25Index) -> DataFrame:

@@ -9,7 +9,9 @@ params) and metrics (docs indexed, terms merged, postings written, bytes
 packed). A re-run skips units whose manifest matches the same lineage —
 idempotent resume after any failure, no partial-partition state (the
 manifest is written only after the data committed, and Spark's parquet
-writes are atomic per directory via _SUCCESS).
+writes are atomic per directory via _SUCCESS). ``root`` may be any
+Hadoop-FS URI: manifests and meta.json go through the indexer's path
+helpers, and indexer.read_index reads the finished root.
 """
 
 from __future__ import annotations
@@ -18,8 +20,19 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from bm25_spark.operators.docids import assign_doc_ids
+from bm25_spark.operators.indexer import (
+    _list_dir,
+    _path_is_dir,
+    _write_meta,
+    _write_tables,
+    build_index,
+    index_meta,
+    read_meta,
+)
 
 
 def _manifest_dir(root: str) -> str:
@@ -42,16 +55,10 @@ def lineage_fingerprint(params: dict) -> str:
 def completed_partitions(root: str, fingerprint: str) -> set[str]:
     done = set()
     mdir = _manifest_dir(root)
-    if not os.path.isdir(mdir):
-        return done
-    for name in os.listdir(mdir):
-        if not name.endswith(".json"):
-            continue
-        try:
-            with open(os.path.join(mdir, name)) as f:
-                m = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
+    # a manifest whose Hadoop-branch write was cut short is only its .tmp
+    names = {n.removesuffix(".tmp") for n in _list_dir(mdir)}
+    for name in sorted(n for n in names if n.endswith(".json")):
+        m = read_meta(os.path.join(mdir, name)) or {}
         if m.get("fingerprint") == fingerprint and m.get("status") == "done":
             done.add(m["pk"])
     return done
@@ -82,14 +89,6 @@ def checkpointed_build(
     completed partitions (lineage fingerprint = build params; callers that
     need input-data fingerprints can add a snapshot id to build_kwargs —
     with Iceberg inputs this is the snapshot_id, giving exact lineage)."""
-    from bm25_spark.operators.docids import assign_doc_ids
-    from bm25_spark.operators.indexer import (
-        _write_meta,
-        _write_tables,
-        build_index,
-        index_meta,
-    )
-
     build_kwargs = dict(build_kwargs or {})
     fp = lineage_fingerprint(
         {"partition_col": partition_col, **{k: str(v) for k, v in build_kwargs.items()}}
@@ -99,7 +98,6 @@ def checkpointed_build(
         r[0]
         for r in transcripts.select(partition_col).distinct().collect()
     ]
-    os.makedirs(_manifest_dir(root), exist_ok=True)
     summary = {
         "partitions_total": len(keys),
         "partitions_skipped": 0,
@@ -149,9 +147,9 @@ def checkpointed_build(
                 # count-back verification off the committed files, scoped to
                 # this batch's directories (a batch never re-reads the rest)
                 written = [
-                    os.path.join(base, f"pk={k}")
-                    for k in batch
-                    if os.path.isdir(os.path.join(base, f"pk={k}"))
+                    p
+                    for p in (os.path.join(base, f"pk={k}") for k in batch)
+                    if _path_is_dir(p)
                 ]
                 if written:
                     counts = (
@@ -180,10 +178,7 @@ def checkpointed_build(
                     "metrics": metrics_by_pk[key],
                     "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
                 }
-                tmp = _manifest_path(root, key) + ".tmp"
-                with open(tmp, "w") as f:
-                    json.dump(manifest, f)
-                os.replace(tmp, _manifest_path(root, key))
+                _write_meta(manifest, _manifest_path(root, key), indent=None)
                 summary["partitions_built"] += 1
             summary["build_jobs"] += 1
     finally:
@@ -193,23 +188,3 @@ def checkpointed_build(
             spark.conf.set(conf_key, prev_mode)
     return summary
 
-
-def read_checkpointed_index(spark: SparkSession, root: str, shard_size: int | None = None):
-    """Load an index written by checkpointed_build (pk recovered from the
-    partition directories). Same reader rule as indexer.read_index: the
-    decode-critical shard_size comes from meta.json or the argument, never
-    from a default."""
-    from bm25_spark.operators.indexer import _index_from_tables, read_meta
-
-    meta = read_meta(os.path.join(root, "meta.json")) or {}
-
-    def rd(tname: str) -> DataFrame:
-        df = spark.read.option("basePath", os.path.join(root, tname)).parquet(
-            os.path.join(root, tname, "pk=*")
-        )
-        return df.withColumn("pk", F.col("pk").cast("string"))
-
-    return _index_from_tables(
-        spark, root, rd, meta, os.path.isdir(os.path.join(root, "doclens")),
-        shard_size=shard_size, partitioned=True,
-    )

@@ -1,8 +1,8 @@
 """Incremental index ingestion via Structured Streaming.
 
 Lucene-style segment model: each micro-batch lands a raw doc segment with
-stable global doc_ids under ``root/segments/``; a compaction step merges
-all segments into a normal BM25Index with GLOBAL df/idf/avgdl
+stable corpus-wide doc_ids under ``root/segments/``; a compaction step
+merges all segments into a normal BM25Index with corpus-wide df/idf/avgdl
 (per-segment stats are never mixed — BM25 stats must be corpus-wide, so
 query-serving always happens against a compacted view).
 
@@ -13,17 +13,28 @@ query-serving always happens against a compacted view).
   streaming checkpoint + idempotent overwrite of segment=<batch_id>.
 - ``compact_segments``: segments -> BM25Index (one shuffle per index table,
   same plan as a batch build).
+
+``root`` may be any Hadoop-FS URI: the offsets manifest and
+ingest_meta.json go through the indexer's path helpers.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bm25_spark.operators.docids import assign_doc_ids
+from bm25_spark.operators.indexer import (
+    _list_dir,
+    _write_meta,
+    build_index,
+    merge_indexes,
+    read_index,
+    read_meta,
+    write_index,
+)
 
 
 def _segment_path(root: str, batch_id: int) -> str:
@@ -36,22 +47,6 @@ def _offsets_path(root: str) -> str:
 
 def _meta_path(root: str) -> str:
     return os.path.join(root, "ingest_meta.json")
-
-
-def _load_json(path: str) -> dict:
-    try:
-        with open(path) as f:
-            return json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return {}
-
-
-def _store_json(obj: dict, path: str) -> None:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(obj, f)
-    os.replace(tmp, path)
 
 
 def _segment_index_path(root: str, batch_id: int) -> str:
@@ -73,8 +68,8 @@ def stream_ingest(
     shard_size: int = 1 << 20,
 ):
     """Start (and with available_now=True, run to completion) the ingest
-    stream. Each segment holds raw doc rows with stable global doc_ids for
-    later global compaction. ``stopwords``/``text_col`` are compaction-time
+    stream. Each segment holds raw doc rows with stable corpus-wide doc_ids
+    for later compaction. ``stopwords``/``text_col`` are compaction-time
     tokenizer settings — they are recorded in ingest_meta.json so
     compact_segments applies them without the caller re-passing.
 
@@ -88,19 +83,20 @@ def stream_ingest(
     index (indexer.write_index, which tokenizes the batch once) under
     ``segment_indexes/`` for compact_segments(incremental=True)."""
     checkpoint_dir = checkpoint_dir or os.path.join(root, "_checkpoint")
-    _store_json(
+    _write_meta(
         {
             "stopwords": sorted(stopwords) if stopwords else None,
             "text_col": text_col,
             "order_cols": list(order_cols),
         },
         _meta_path(root),
+        indent=None,
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        man = _load_json(_offsets_path(root))
+        man = read_meta(_offsets_path(root)) or {}
         key = str(batch_id)
         if key in man:
             offset = int(man[key]["offset"])  # replayed batch: stable ids
@@ -115,13 +111,11 @@ def stream_ingest(
         seg.write.mode("overwrite").parquet(_segment_path(root, batch_id))
         n = spark.read.parquet(_segment_path(root, batch_id)).count()
         man[key] = {"offset": offset, "n": n}
-        _store_json(man, _offsets_path(root))
+        _write_meta(man, _offsets_path(root), indent=None)
         if build_segment_index:
             # tokenize ONCE at ingest; later compaction merges the packed
             # segment indexes without re-reading the text
             # (indexer.merge_indexes)
-            from bm25_spark.operators.indexer import build_index, write_index
-
             seg_df = spark.read.parquet(_segment_path(root, batch_id))
             idx = build_index(
                 seg_df,
@@ -158,7 +152,7 @@ def compact_segments(
     text_col: str | None = None,
     incremental: bool = False,
 ):
-    """Merge all segments into a BM25Index with global statistics.
+    """Merge all segments into a BM25Index with corpus-wide statistics.
 
     Default path: batch build over the union of raw segments (fused
     tokenize+pack). ``incremental=True``: merge the per-segment PACKED
@@ -171,16 +165,13 @@ def compact_segments(
     indexes themselves — an explicit argument that disagrees with the
     segment metadata raises instead of being silently ignored (changing
     k1/b/shard_size/stopwords requires a rebuild, not a merge)."""
-    from bm25_spark.operators.indexer import build_index
-
     if incremental:
-        import glob
-
-        from bm25_spark.operators.indexer import merge_indexes, read_index
-
-        roots = sorted(
-            glob.glob(os.path.join(root, "segment_indexes", "segment=*"))
-        )
+        seg_dir = os.path.join(root, "segment_indexes")
+        roots = [
+            os.path.join(seg_dir, name)
+            for name in _list_dir(seg_dir)
+            if name.startswith("segment=")
+        ]
         if not roots:
             raise ValueError(
                 "no segment indexes — run stream_ingest with "
@@ -224,7 +215,7 @@ def compact_segments(
             )
         return merge_indexes(segs)
 
-    meta = _load_json(_meta_path(root))
+    meta = read_meta(_meta_path(root)) or {}
     if stopwords is None:
         stopwords = meta.get("stopwords")
     if text_col is None:

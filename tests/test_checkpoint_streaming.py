@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bm25_spark.operators import searcher
-from bm25_spark.operators.indexer import build_index
+from bm25_spark.operators.indexer import build_index, read_index
 from bm25_spark.plans import checkpoint
 from bm25_spark.sources.datagen import (
     TRANSCRIPT_SCHEMA,
@@ -49,8 +49,8 @@ def test_checkpointed_build_and_resume(spark, tmp_path):
 
     # the reloaded indexes (batched AND per-pk jobs) answer partition-scoped
     # queries like a fresh build
-    idx = checkpoint.read_checkpointed_index(spark, root)
-    idx2 = checkpoint.read_checkpointed_index(spark, root2)
+    idx = read_index(spark, root)
+    idx2 = read_index(spark, root2)
     fresh = build_index(df, partition_col="role")
     for key in ["user", "assistant"]:
         a = [(r["doc_id"], round(r["score"], 9)) for r in
@@ -153,8 +153,10 @@ def test_merge_after_warm_serves_fresh_postings(spark):
     from bm25_spark.operators.packed import search_packed, warm_query_caches
 
     df = synthetic_transcripts(spark, n_convs=24, seed=13)
-    with_ids = assign_doc_ids(df)
-    full = build_index(with_ids, id_col="doc_id", shard_size=64)
+    # cached ids and materialized full/merged indexes: every ranking below
+    # probes them lazily, and unpersisted each probe re-ran the builds
+    with_ids = assign_doc_ids(df).cache()
+    full = build_index(with_ids, id_col="doc_id", shard_size=64).materialize()
     seg_a = build_index(
         with_ids.filter(F.col("doc_id") < 150), id_col="doc_id",
         shard_size=64, check_empty=False,
@@ -172,7 +174,7 @@ def test_merge_after_warm_serves_fresh_postings(spark):
             .orderBy("rank").collect()
         ]
 
-    merged = merge_indexes([seg_a, seg_b])
+    merged = merge_indexes([seg_a, seg_b]).materialize()
     for q in ("spark query data", "fox dog", "table join"):
         got = ranked(merged, q)
         want = ranked(full, q)
@@ -192,6 +194,9 @@ def test_merge_after_warm_serves_fresh_postings(spark):
     seg_a.docs = merged.docs
     seg_a.invalidate_caches()
     assert ranked(seg_a, "spark query data") == ranked(full, "spark query data")
+    for idx in (full, merged):
+        idx.unpersist()
+    with_ids.unpersist()
 
 
 def test_merge_indexes_partitioned(spark, tmp_path):
@@ -261,6 +266,49 @@ def test_incremental_compaction_matches_rebuild(spark, tmp_path):
     b = [(r["doc_id"], round(r["score"], 9)) for r in
          searcher.search(rebuilt, "spark data query", 10).collect()]
     assert a == b
+
+
+def test_stream_ingest_root_resumes_from_another_cwd(spark, roots, tmp_path):
+    """A second stream_ingest run on the same root and stream checkpoint,
+    started from another working directory, continues the doc-id
+    offsets: ids stay distinct and dense, and incremental compaction
+    equals the rebuild."""
+    df = synthetic_transcripts(spark, n_convs=10, seed=9)
+    inp = str(tmp_path / "in")
+    root = roots("stream")
+    half1 = df.filter(F.col("conv_id") < "conv-000005")
+    half1.write.parquet(inp)
+    kw = dict(build_segment_index=True, shard_size=64)
+    ingest.stream_ingest(spark, inp, root, TRANSCRIPT_SCHEMA, **kw)
+    df.subtract(half1).write.mode("append").parquet(inp)
+    roots.chdir("cwd1")
+    ingest.stream_ingest(spark, inp, root, TRANSCRIPT_SCHEMA, **kw)
+    rebuilt = ingest.compact_segments(spark, root, shard_size=64)
+    ids = sorted(r[0] for r in rebuilt.docs.select("doc_id").collect())
+    assert ids == list(range(df.count()))
+    merged = ingest.compact_segments(spark, root, incremental=True)
+    assert _packed_snap(merged) == _packed_snap(rebuilt)
+
+
+def test_checkpointed_root_resumes_from_another_cwd(spark, roots):
+    """A checkpointed_build resumed from another working directory finds
+    every manifest and skips every pk; read_index of the root answers
+    like a fresh build."""
+    df = synthetic_transcripts(spark, n_convs=12, seed=3)
+    root = roots("ck")
+    s1 = checkpoint.checkpointed_build(df, root, partition_col="role")
+    roots.chdir("cwd1")
+    s2 = checkpoint.checkpointed_build(df, root, partition_col="role")
+    assert s2["partitions_built"] == 0
+    assert s2["partitions_skipped"] == s1["partitions_total"] > 0
+    idx = read_index(spark, root)
+    fresh = build_index(df, partition_col="role")
+    for key in ["user", "assistant"]:
+        a = [(r["doc_id"], round(r["score"], 9)) for r in
+             searcher.search_in(idx, key, "spark data query", 10).collect()]
+        b = [(r["doc_id"], round(r["score"], 9)) for r in
+             searcher.search_in(fresh, key, "spark data query", 10).collect()]
+        assert a == b
 
 
 def test_stream_ingest_stopwords_reach_compaction(spark, tmp_path):

@@ -62,12 +62,11 @@ def test_feedback_empty_ids_is_plain_search(engine):
 
 
 def test_feedback_warm_head_zero_jobs_and_identical(engine):
-    """On a fully-warmed packed head, building a feedback query's result
-    DataFrame launches ZERO Spark jobs (relevant-doc term counts
+    """On a fully-warmed packed head, a feedback query launches ZERO Spark
+    jobs from the call through ``collect()`` (relevant-doc term counts
     reconstructed from the RAM-resident postings blocks, expanded query
-    served by the driver scorer), and its rows are exactly the cold
-    path's. Jobs are counted only while the DataFrame is built, not at
-    collect, where ``search``'s ``orderBy("rank")`` runs its jobs."""
+    served by the driver scorer), and its rows, in rank order, are
+    exactly the cold path's."""
     from bm25_spark.functions.analyzer import tokenize_text
     from bm25_spark.operators.packed import warm_query_caches
 
@@ -93,13 +92,12 @@ def test_feedback_warm_head_zero_jobs_and_identical(engine):
     sc.setJobGroup("fb-warm-zero", "feedback zero-job assertion")
     try:
         res = feedback.search_with_feedback(engine, "cats", rel, limit=6)
+        rows = res.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup("fb-warm-zero")) == []
-    warm = [
-        (r["doc_id"], round(r["score"], 10))
-        for r in res.orderBy("rank").collect()
-    ]
+    assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
+    warm = [(r["doc_id"], round(r["score"], 10)) for r in rows]
     assert warm == cold
 
 

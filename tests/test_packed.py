@@ -456,6 +456,44 @@ def test_warm_caches_identical_results(packed_synth):
     assert search_packed(packed_synth, [(0, "zz_unknown_term")], limit=5).count() == 0
 
 
+def test_warm_search_wrappers_zero_jobs_rank_ordered(spark, monkeypatch):
+    """On a warmed head, ``search``, ``search_in`` and ``search_many``
+    launch no Spark job from the call through ``collect()``, and
+    ``collect()`` returns rank order there and on the cluster path (whose
+    result ends in a local sort), with the same rows on both."""
+    from bm25_spark.operators import packed as packed_mod
+    from bm25_spark.operators import searcher
+
+    idx = build_index(
+        synthetic_transcripts(spark, n_convs=20, seed=11),
+        partition_col="role", shard_size=64,
+    ).materialize()
+    assert packed_mod.warm_query_caches(idx) is True
+    q = "spark data query table"
+    calls = {
+        "search": lambda: searcher.search(idx, q, limit=12),
+        "search_in": lambda: searcher.search_in(idx, "user", q, limit=12),
+        "search_many": lambda: searcher.search_many(
+            idx, ["user", "assistant"], q, limit=12
+        ),
+    }
+    sc = spark.sparkContext
+    driver = {}
+    for name, call in calls.items():
+        sc.setJobGroup(f"warm-{name}", "warm wrapper zero-job assertion")
+        try:
+            driver[name] = call().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(f"warm-{name}")) == [], name
+        ranks = [r["rank"] for r in driver[name]]
+        assert ranks == list(range(1, 13)), name
+    monkeypatch.setattr(packed_mod, "DRIVER_PATH_MAX_WORK", -1)
+    for name, call in calls.items():
+        assert call().collect() == driver[name], name
+    idx.unpersist()
+
+
 def test_warm_head_unknown_terms_do_not_grow_cache(packed_synth):
     """A complete dictionary answers "not in the index" itself: distinct
     unknown-term queries, alone or beside a known term, leave a warmed

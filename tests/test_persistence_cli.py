@@ -76,19 +76,17 @@ def test_read_index_refuses_to_guess_shard_size(spark, tmp_path):
     q = "spark data"
     assert _ranked(search(idx2, q, limit=5)) == _ranked(search(idx, q, limit=5))
 
-    # the checkpointed reader follows the same rule: no meta.json, no
+    # a checkpointed root follows the same rule: no meta.json, no
     # guessed default shard_size
     ck = str(tmp_path / "ck_nometa")
     checkpoint.checkpointed_build(
         df, ck, partition_col="role", build_kwargs={"shard_size": 64}
     )
-    want = _ranked(
-        search_in(checkpoint.read_checkpointed_index(spark, ck), "user", q, limit=5)
-    )
+    want = _ranked(search_in(read_index(spark, ck), "user", q, limit=5))
     os.remove(os.path.join(ck, "meta.json"))
     with pytest.raises(ValueError, match="shard_size"):
-        checkpoint.read_checkpointed_index(spark, ck)
-    idx3 = checkpoint.read_checkpointed_index(spark, ck, shard_size=64)
+        read_index(spark, ck)
+    idx3 = read_index(spark, ck, shard_size=64, partitioned=True)
     assert _ranked(search_in(idx3, "user", q, limit=5)) == want
 
     # a postings table without block offsets is not a layout any scorer
@@ -101,6 +99,48 @@ def test_read_index_refuses_to_guess_shard_size(spark, tmp_path):
     ).write.parquet(os.path.join(old, "postings"))
     with pytest.raises(ValueError, match="rebuild the index"):
         read_index(spark, old, shard_size=64)
+
+
+def test_index_root_read_from_another_cwd(spark, roots):
+    """write_index puts meta.json under the root whatever its form, and
+    read_index finds it from another working directory."""
+    import os
+
+    df = synthetic_transcripts(spark, n_convs=6, seed=5)
+    idx = build_index(df, shard_size=64, stopwords=("the", "and"))
+    root = roots("idx")
+    write_index(idx, root)
+    roots.chdir("cwd1")
+    idx2 = read_index(spark, root)
+    assert idx2.shard_size == 64
+    assert idx2.stopwords == frozenset({"the", "and"})
+    q = "spark data query plan"
+    assert _ranked(search(idx2, q, limit=10)) == _ranked(search(idx, q, limit=10))
+    if roots.form == "plain":
+        # no Hadoop .crc sidecar beside a plain root's meta.json
+        local = str(roots.tmp_path / "idx")
+        files = [n for n in os.listdir(local) if not os.path.isdir(f"{local}/{n}")]
+        assert files == ["meta.json"]
+
+
+def test_state_record_cut_short_reads_from_tmp(spark, tmp_path, monkeypatch):
+    """On the Hadoop branch _write_meta deletes the old record before it
+    renames the new one in: a crash between the two leaves only the
+    complete .tmp, which read_meta and the checkpoint resume still see."""
+    from bm25_spark.operators import indexer
+    from bm25_spark.plans import checkpoint
+
+    monkeypatch.setattr(indexer, "_local_path", lambda path: None)
+    root = str(tmp_path / "ck")
+    path = checkpoint._manifest_path(root, "user")
+    indexer._write_meta({"pk": "user", "status": "done", "fingerprint": "a"}, path)
+    new = {"pk": "user", "status": "done", "fingerprint": "b"}
+    indexer._write_meta(new, path + ".tmp")
+    _, fs, jpath = indexer._hadoop_fs(path)
+    fs.delete(jpath, False)
+    assert indexer._list_dir(checkpoint._manifest_dir(root)) == ["user.json.tmp"]
+    assert indexer.read_meta(path) == new
+    assert checkpoint.completed_partitions(root, "b") == {"user"}
 
 
 def test_cli_build_and_search(spark, tmp_path, capsys):

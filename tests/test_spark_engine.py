@@ -77,6 +77,11 @@ def test_docid_assignment_matches_window(spark, synth):
         assert diff.count() == 0, method
         ids = [r[0] for r in a.select("doc_id").collect()]
         assert sorted(ids) == list(range(n)), method
+    # bucket p is routed to partition p: every bucket holds its sampled
+    # lower bound, so all P buckets are non-empty and fill P partitions
+    # (a hash of P bucket ids into P partitions leaves some empty)
+    parts = assign_doc_ids(df).select(F.spark_partition_id()).distinct()
+    assert parts.count() == spark.sparkContext.defaultParallelism
 
 
 def test_docid_sample_handles_nul_in_keys(spark):

@@ -330,7 +330,7 @@ bound what ANY job can scale to on this box: pure-CPU busy-loops
 32 workers, and streaming-memory work (`tools/bandwidth_calibration.py`,
 the shape of the build's tokenize+pack map stage) peaks at ~8-11x
 aggregate around 8-16 workers and collapses under 32-way
-oversubscription — the memory controllers saturate long before the
+oversubscription (both scripts were last in commit abf3981) — the memory controllers saturate long before the
 cores do. A single box therefore cannot exhibit 4x scaling into 32
 nominal cores, which is why the N->4N evidence uses {lo}->{hi}, where
 both calibrations show real headroom. On an actual 4N-executor cluster
@@ -391,8 +391,9 @@ def main() -> int:
         "--levels",
         default="2,8",
         help="N,4N parallelism levels. Default 2,8: host calibration "
-        "(tools/host_calibration) shows this VM delivers only ~19x "
-        "aggregate CPU at 32 workers, so a 4x scaling claim is only "
+        "(tools/host_calibration.py, last in commit abf3981) shows this "
+        "VM delivers only ~19x aggregate CPU at 32 workers, so a 4x "
+        "scaling claim is only "
         "physically measurable below that ceiling.",
     )
     ap.add_argument("--extra-level", type=int, default=32)
